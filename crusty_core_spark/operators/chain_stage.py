@@ -484,19 +484,12 @@ def run_chain_stage(chain_input, job_state, cfg, n_buckets: int = N_JOB_BUCKETS,
     """chain_input (CHAIN_IN rows) × job_state (JOB_STATE rows) → CHAIN_OUT.
 
     Jobs are hashed into ``n_buckets`` cogroup keys; exact per-job serial
-    semantics are preserved inside each bucket (jobs are independent).
-    SPARK_CRAWL_PANDAS_CHAIN forces the applyInPandas entry (A/B
-    measurement kill-switch; the fold kernel is shared either way)."""
-    import os
-
+    semantics are preserved inside each bucket (jobs are independent)."""
     from pyspark.sql import functions as F
 
     b = lambda c: F.pmod(F.col(c), F.lit(n_buckets)).cast("int")  # noqa: E731
     ci = chain_input.withColumn("_bucket", b("job_id"))
     js = job_state.withColumn("_bucket", b("job_id"))
     grouped = ci.groupBy("_bucket").cogroup(js.groupBy("_bucket"))
-    if os.environ.get("SPARK_CRAWL_PANDAS_CHAIN"):
-        return grouped.applyInPandas(
-            make_chain_fn(cfg, custom_filters, drain), schema=CHAIN_OUT)
     return grouped.applyInArrow(
         make_chain_arrow_fn(cfg, custom_filters, drain), schema=CHAIN_OUT)

@@ -37,7 +37,10 @@ Scale notes (the 100 TB design intent — verified locally at small SF):
   head/tail iterations are job-launch-overhead-bound on any cluster size,
   so a scale-out engine needs a local mode for them just like AQE collapses
   tiny shuffles to LocalTableScan. Parity across paths is pinned by
-  tests/test_fastpath.py.
+  tests/test_fastpath.py. A distributed iteration whose commit is one file
+  per table (``_commit_files``) also commits on the driver, through the
+  local path's ``commit_iteration``; tests/test_commit_route.py pins both
+  commit routes to the same tables.
 """
 
 from __future__ import annotations
@@ -140,6 +143,20 @@ def _pending_schema():
     from pyspark.sql import types as PT
 
     return PT.StructType.fromDDL(_PENDING_DDL)
+
+#: rows per output file of a distributed iteration's commit, sized by the
+#: pre-iteration pending count (the accepted count is not known before the
+#: writers start). An iteration whose commit fits one file per table
+#: collects its cached results and commits on the driver instead
+#: (local_step.commit_iteration): Spark writer jobs would cost seconds of
+#: fixed floor for a few thousand rows.
+_COMMIT_FILE_ROWS = 10_000
+
+
+def _commit_files(pending: int) -> int:
+    """Output files per table for a distributed commit."""
+    return max(1, min(32, int(pending) // _COMMIT_FILE_ROWS + 1))
+
 
 #: in-flight deferred commits per workdir (join callables). A new engine
 #: taking over the same workdir IN-PROCESS (the kill/resume test pattern)
@@ -274,7 +291,7 @@ class CrawlEngine:
             self.local_thr = self.cfg.local_iter_threshold
         self._workdir_key = _drain_workdir(workdir)
         #: deferred-commit record of the previous iteration (see
-        #: _commit_chain_out defer=True / _join_deferred)
+        #: _commit_chain_out / _join_deferred)
         self._deferred = None
         self.io = TableIO(spark, workdir)
 
@@ -509,7 +526,7 @@ class CrawlEngine:
         # process death before the join simply re-seeds, which is free).
         deferred_futs = self._commit_chain_out(
             chain_out, it=0, remaining=None, fetch_log=None,
-            counts={}, finish_reason="RootRejected", defer=True)
+            counts={}, finish_reason="RootRejected")
         # collect while chain_out is still cached: a recompute would let
         # Catalyst prune the cogroup input columns out from under bucket_fn
         seeded_buckets = [
@@ -992,9 +1009,7 @@ class CrawlEngine:
         # pinned by tests/test_chain_fold.py). Detail mode keeps full
         # rows — its sched log records the urls.
         # SPARK_CRAWL_NO_SLIM: measurement kill-switch for A/B-ing the
-        # slimming against the identical build (bench methodology);
-        # SPARK_CRAWL_SLIM_ROWS: the round-4 per-row slim exchange (slim
-        # rows ride individually with nulled strings), kept for A/B.
+        # slimming against the identical build (bench methodology).
         slim_cands = None
         if cands is None:
             pass
@@ -1016,8 +1031,7 @@ class CrawlEngine:
             keep = F.col("pre_action").isNull()
             for c in ("url", "host", "rel", "alt", "text"):
                 cands = cands.withColumn(c, F.when(keep, F.col(c)))
-            if not os.environ.get("SPARK_CRAWL_SLIM_ROWS"):
-                slim_cands = True  # split+aggregate below (needs the cache)
+            slim_cands = True  # split+aggregate below (needs the cache)
         else:
             cands = cands.withColumn(
                 "pre_action", F.lit(None).cast("string")
@@ -1287,6 +1301,41 @@ class CrawlEngine:
             remaining = remaining.select(*_PENDING_COLS).unionByName(
                 self.spark.createDataFrame(def_rows, _pending_schema())
             )
+        state_kw = {}
+        if live_deadline:
+            # overwritten every iteration: consumed carry-overs drop out,
+            # this wave's stragglers ride the (checkpointed) manifest state
+            state_kw["deferred_tasks"] = def_rows
+        caches = [df for df in (chain_out, cands, cands_raw, parsed, fetched)
+                  if df is not None]
+        if _commit_files(int(self.io.state.get("pending", 0))) == 1:
+            # one-file commit: collect the cached results once and commit
+            # on the driver like a local iteration — writes, compaction,
+            # state and checkpoint all land inside this step
+            from crusty_core_spark.plans.local_step import commit_iteration
+
+            resolved = resolve_counts()
+            # one manifest dump for the whole commit, as in step_local
+            with self.io.deferred_manifest():
+                commit_iteration(
+                    self, it,
+                    # exact ints: no float64 round trip for null-bearing
+                    # columns
+                    chain_out.toArrow().to_pandas(integer_object_nulls=True),
+                    fetch_log.toArrow(), resolved["counts"],
+                    remaining=(remaining.toPandas() if remaining is not None
+                               else None),
+                    drain=drain, read_bytes=resolved["bytes"]["read"],
+                    write_bytes=resolved["bytes"]["write"], exec_local=0,
+                    t0=t0, deferred_jobs=deferred_jobs, extra_state=state_kw,
+                )
+            for df in caches:
+                df.unpersist()
+            self._mem_pending = None
+            if prof:
+                mark("driver_commit")
+                self._print_profile(it, resolved["counts"], marks)
+            return resolved["counts"]
         deferred_futs = self._commit_chain_out(
             chain_out,
             it=it,
@@ -1295,7 +1344,6 @@ class CrawlEngine:
             counts_resolver=resolve_counts,
             iter_t0=t0,
             finish_reason="SoftTimeout" if drain else "Complete",
-            defer=True,
             deferred_jobs=deferred_jobs,
         )
         mark("commit+counts")
@@ -1322,11 +1370,6 @@ class CrawlEngine:
                 set(new_buckets)
                 | {j % N_JOB_BUCKETS for j in deferred_jobs}
             )
-        state_kw = {}
-        if live_deadline:
-            # overwritten every iteration: consumed carry-overs drop out,
-            # this wave's stragglers ride the (checkpointed) manifest state
-            state_kw["deferred_tasks"] = def_rows
         self.io.set_state(iter=it, pending=pending,
                           pending_buckets=sorted(new_buckets), **state_kw)
         # the slow, non-gating writers keep running in the background; the
@@ -1348,20 +1391,23 @@ class CrawlEngine:
             self._mem_pending = mem
         self._deferred = {
             "futures": deferred_futs,
-            "unpersist": [df for df in
-                          (chain_out, cands, cands_raw, parsed, fetched)
-                          if df is not None],
+            "unpersist": caches,
             "label": f"iter-{it:06d}",
         }
         _DEFERRED_JOIN_BY_WORKDIR[self._workdir_key] = self._join_deferred
         if prof:
             mark("state")
-            deltas = {
-                marks[i][0]: round(marks[i][1] - marks[i - 1][1], 2)
-                for i in range(1, len(marks))
-            }
-            print(f"[profile] iter={it} ready={n_ready} {deltas}", flush=True)
+            self._print_profile(it, counts, marks)
         return counts
+
+    @staticmethod
+    def _print_profile(it, counts, marks) -> None:
+        deltas = {
+            marks[i][0]: round(marks[i][1] - marks[i - 1][1], 2)
+            for i in range(1, len(marks))
+        }
+        print(f"[profile] iter={it} ready={sum(counts.values())} {deltas}",
+              flush=True)
 
     def _join_deferred(self) -> None:
         """Land the previous iteration's deferred commits, release its
@@ -1580,8 +1626,7 @@ class CrawlEngine:
     def _commit_chain_out(self, chain_out, it, remaining, fetch_log,
                           counts=None, counts_resolver=None,
                           iter_t0=None, finish_reason="Complete",
-                          touched_shards=None, defer=False,
-                          deferred_jobs=None):
+                          touched_shards=None, deferred_jobs=None):
         """Commit an iteration. Every write is O(this iteration's work):
 
         - ``chain`` append: tasks/sched/lineage log rows (state rows are
@@ -1596,11 +1641,14 @@ class CrawlEngine:
 
         The dedup commit-last semantics hold because the chain only emits
         fresh URLs, so the append IS the MERGE (task_filters.rs:199-211).
-        Independent writes run concurrently = lower serial floor = better
-        N→4N scaling. When ``counts_resolver`` is given (a distributed step
-        with its counts collect in flight on a background thread), the
-        writers that need no counts start immediately and only the Bloom
-        commit + metrics row wait on the resolver."""
+        Independent writes run concurrently as Spark jobs on the
+        persistent writer pool; the returned futures are joined by
+        ``_join_deferred`` (politeness mode's frontier overwrite is the one
+        writer joined here). Used by the distributed seed and by
+        iterations too big for the driver commit (``_commit_files`` > 1).
+        When ``counts_resolver`` is given, the writers that need no counts
+        start immediately and only the Bloom commit + metrics row wait on
+        the resolver."""
         from crusty_core_spark.operators import bloom
 
         io = self.io
@@ -1615,8 +1663,7 @@ class CrawlEngine:
         # count, so it tracks the write volume within one branching factor,
         # and a misestimate only shifts file sizes (compaction bounds counts).
         if counts_resolver is not None:
-            est = int(self.io.state.get("pending", 0))
-            w_parts = max(1, min(32, est // 10_000 + 1))
+            w_parts = _commit_files(int(self.io.state.get("pending", 0)))
         else:
             n_accepted = getattr(self, "_sched_counts", {}).get("accept", 0) or 0
             w_parts = max(1, min(32, int(n_accepted) // 20_000 + 1))
@@ -1779,28 +1826,18 @@ class CrawlEngine:
 
             return run
 
-        deferred_futs: list = []
-        if defer:
-            # persistent pool: the futures outlive this call by design
-            if getattr(self, "_writer_pool", None) is None:
-                self._writer_pool = ThreadPoolExecutor(
-                    max_workers=8, thread_name_prefix="commit"
-                )
-            deferred_futs = [
-                self._writer_pool.submit(timed(w)) for w in defer_writers
-            ]
-            if sync_writers:
-                with ThreadPoolExecutor(max_workers=len(sync_writers)) as ex:
-                    for f in [ex.submit(timed(w)) for w in sync_writers]:
-                        f.result()
-        else:
-            writers = sync_writers + defer_writers
-            # independent tables → independent Spark jobs, issued
-            # concurrently (all read from the persisted chain_out; TableIO
-            # serializes manifest commits)
-            with ThreadPoolExecutor(max_workers=len(writers)) as ex:
-                for f in [ex.submit(timed(w)) for w in writers]:
-                    f.result()  # propagate the first failure
+        # persistent pool: the futures outlive this call by design
+        if getattr(self, "_writer_pool", None) is None:
+            self._writer_pool = ThreadPoolExecutor(
+                max_workers=8, thread_name_prefix="commit"
+            )
+        deferred_futs = [
+            self._writer_pool.submit(timed(w)) for w in defer_writers
+        ]
+        if sync_writers:
+            with ThreadPoolExecutor(max_workers=len(sync_writers)) as ex:
+                for f in [ex.submit(timed(w)) for w in sync_writers]:
+                    f.result()
 
         # metrics accumulate in the manifest (checkpointed) and are
         # materialized as a table by flush_metrics() — avoids a tiny table

@@ -266,22 +266,41 @@ def _bloom_positions_worker(args):
     ]
 
 
-def _bloom_commit(io, cfg, n_workers, jobs_list, urls_list, hosts_list,
+#: accepted-task count from which the Bloom bit positions are computed
+#: across the fork pool: the pure-python xxhash64 twin costs ~60 us/url
+#: serial while the pool dispatch for a list of short urls is ~10 ms
+_BLOOM_POOL_MIN = 512
+
+
+def _bloom_pool(cfg, n_tasks: int):
+    """The fork pool for a commit's Bloom positions, or None (serial).
+    Called on the thread that runs the iteration, BEFORE the commit
+    fan-out: ``_bloom_commit`` runs on a commit-pool thread, and forking
+    the pool lazily from there would fork while the py4j and commit
+    threads hold locks the child inherits."""
+    n = cfg.resolved_local_workers()
+    if not cfg.use_bloom or n <= 1 or n_tasks < _BLOOM_POOL_MIN:
+        return None
+    return _get_pool(n)
+
+
+def _bloom_commit(io, cfg, pool, jobs_list, urls_list, hosts_list,
                   shard_by_host):
     """Bit-position computation + shard merge as ONE unit, submitted to
     the commit pool so the serial-path xxhash64 twin (thin iterations,
     below the fork-pool threshold) runs concurrently with the other
     table writes instead of on the main thread between submissions.
-    Pool from ~2k rows: the pure-python twin costs ~60 us/url serial
-    while the fork-pool dispatch for a list of short urls is ~10 ms."""
-    if n_workers > 1 and len(jobs_list) >= 512:
+    ``pool`` comes from ``_bloom_pool`` (resolved by the caller — this
+    function never forks)."""
+    if pool is not None:
         import numpy as np
 
         splits = [
             ix for ix in np.array_split(np.arange(len(jobs_list)),
-                                        n_workers) if len(ix)
+                                        cfg.resolved_local_workers())
+            if len(ix)
         ]
-        parts = _get_pool(n_workers).map(
+        parts = pool.map(
             _bloom_positions_worker,
             [
                 (cfg.bloom_num_hashes, cfg.bloom_bits_per_shard,
@@ -825,7 +844,7 @@ def _seed_local_inner(engine, seed_pairs, cfg, io, re):
 
     if cfg.use_bloom and len(new_tasks):
         commit_futs.append(_submit(
-            _bloom_commit, io, cfg, n_workers,
+            _bloom_commit, io, cfg, _bloom_pool(cfg, len(new_tasks)),
             new_tasks["job_id"].tolist(), new_tasks["url"].tolist(),
             hosts_list, shard_by_host,
         ))
@@ -1601,6 +1620,45 @@ def _step_local_inner(engine, it: int) -> dict:
         str(k): int(v)
         for k, v in pd.Series(action).value_counts().items()
     }
+    commit_iteration(
+        engine, it, chain_out, fetch_log_pdf, counts,
+        remaining=remaining, drain=drain, read_bytes=int(rd_a.sum()),
+        write_bytes=int(wr_a.sum()), exec_local=1, t0=t0,
+    )
+    if prof:
+        mark("commit")
+        prev = t0
+        deltas = {}
+        for label, t in marks:
+            deltas[label] = round(t - prev, 2)
+            prev = t
+        print(f"[profile] iter={it} ready={sum(counts.values())} LOCAL "
+              f"{deltas}", flush=True)
+    return counts
+
+
+def commit_iteration(engine, it: int, chain_out, fetch_log, counts: dict,
+                     *, remaining=None, drain: bool = False,
+                     read_bytes: int = 0, write_bytes: int = 0,
+                     exec_local: int = 1, t0: float,
+                     deferred_jobs=(), extra_state: dict | None = None):
+    """Commit one crawl iteration from driver-resident results: the table
+    writes, the metrics row, maintenance, state and the checkpoint.
+
+    Both paths end here: every driver-local iteration, and a distributed
+    iteration small enough that its commit is one file per table
+    (``engine._commit_files``), which collects its cached chain output and
+    fetch_log once and hands them over. ``chain_out``: the fold's output
+    frame (CHAIN_OUT rows); ``fetch_log``: a pandas frame or Arrow table
+    of fetch_log rows; ``counts``: fetch action counts; ``remaining``:
+    politeness mode's not-yet-ready rows (frontier columns);
+    ``deferred_jobs``: jobs with a straggler carried to the next iteration
+    (never Finished); ``extra_state``: more manifest state to set with the
+    iteration's."""
+    from pyspark.sql import types as T
+
+    cfg = engine.cfg
+    io = engine.io
     if cfg.sched_log_detail:
         sched = chain_out[chain_out["row_kind"] == "sched"]
         sched_counts = sched.groupby("action").size().to_dict()
@@ -1617,10 +1675,10 @@ def _step_local_inner(engine, it: int) -> dict:
     # per-task set comprehension hashed every task's host)
     hosts_list = new_tasks["host"].tolist()
     shard_by_host = _host_shards(engine, cfg, set(hosts_list))
-    new_shards = sorted(set(shard_by_host.values()))
-    new_buckets = sorted(
-        {int(j) % N_JOB_BUCKETS for j in new_tasks["job_id"].tolist()}
-    )
+    new_buckets = {
+        int(j) % N_JOB_BUCKETS
+        for j in [*new_tasks["job_id"].tolist(), *deferred_jobs]
+    }
 
     # --- commits: pyarrow through the same TableIO manifest. Independent
     # tables commit CONCURRENTLY (the same pattern as the distributed
@@ -1629,7 +1687,6 @@ def _step_local_inner(engine, it: int) -> dict:
     # the durability point — so the crash/recovery model is unchanged.
     commit_futs = []
     _submit = _commit_pool().submit
-    chain_schema = io.schema("chain")
     # boolean-mask selection already copies; assign() adds the column
     # without a SECOND full copy of the 20 object columns
     log_rows = chain_out[chain_out["row_kind"] != "state"].assign(
@@ -1639,7 +1696,7 @@ def _step_local_inner(engine, it: int) -> dict:
     # iteration may be distributed — its frontier scan then starts from
     # parallel input partitions instead of one single-file task
     commit_futs.append(_submit(
-        io.append_pdf, "chain", log_rows, chain_schema,
+        io.append_pdf, "chain", log_rows, io.schema("chain"),
         n_files=min(16, len(log_rows) // 25_000 + 1),
     ))
 
@@ -1665,7 +1722,7 @@ def _step_local_inner(engine, it: int) -> dict:
 
     if cfg.use_bloom and len(new_tasks):
         commit_futs.append(_submit(
-            _bloom_commit, io, cfg, n_workers,
+            _bloom_commit, io, cfg, _bloom_pool(cfg, len(new_tasks)),
             new_tasks["job_id"].tolist(), new_tasks["url"].tolist(),
             hosts_list, shard_by_host,
         ))
@@ -1688,18 +1745,18 @@ def _step_local_inner(engine, it: int) -> dict:
         next_job_ids = set(tasks_pdf["job_id"].tolist())
     else:
         next_job_ids = set(new_tasks["job_id"].tolist())
+    next_job_ids.update(deferred_jobs)
 
     touched = chain_out[
         (chain_out["row_kind"] == "state")
         & (chain_out["action"].isin(["touched", "touched_done"]))
     ]
-    finish_reason = "SoftTimeout" if drain else "Complete"
     finished = touched[~touched["job_id"].isin(next_job_ids)]
     job_log_pdf = pd.DataFrame(
         {
             "job_id": finished["job_id"].astype("int64"),
             "iter": int(it),
-            "reason": finish_reason,
+            "reason": "SoftTimeout" if drain else "Complete",
             "budget_used": finished["budget_used"].astype("int64"),
             "resp_counter": finished["resp_counter"].astype("int64"),
             "seq_counter": finished["seq_counter"].astype("int64"),
@@ -1718,12 +1775,13 @@ def _step_local_inner(engine, it: int) -> dict:
             fl_fields += list(_ddl(engine.user_extract_schema).fields)
         fl_schema = T.StructType(fl_fields)
     commit_futs.append(_submit(
-        io.append_pdf, "fetch_log", fetch_log_pdf, fl_schema
+        io.append_pdf, "fetch_log", fetch_log, fl_schema
     ))
     for f in commit_futs:  # join before the checkpoint (durability point)
         f.result()
 
-    # --- metrics buffer + state + checkpoint (identical to the Spark path)
+    # --- metrics buffer + state + checkpoint (identical on both paths)
+    dedup_stats = getattr(engine, "_dedup_stats", None) or {}
     n_ready = sum(counts.values())
     row = [
         it,
@@ -1734,12 +1792,12 @@ def _step_local_inner(engine, it: int) -> dict:
         engine._sched_counts.get("accept", 0),
         engine._sched_counts.get("skip", 0),
         engine._sched_counts.get("term", 0),
-        int(rd_a.sum()),
-        int(wr_a.sum()),
+        int(read_bytes),
+        int(write_bytes),
         int((time.time() - t0) * 1000),
         dedup_stats.get("dedup_shards_read", 0),
         dedup_stats.get("dedup_read_bytes", 0),
-        1,  # exec_local: driver-local fast path
+        int(exec_local),
     ]
     buf = list(io.state.get("metrics_buffer", []))
     buf.append(row)
@@ -1751,20 +1809,9 @@ def _step_local_inner(engine, it: int) -> dict:
         + engine._sched_counts.get("accept", 0)
     )
     if cfg.delay_ms > 0:
-        new_buckets = sorted(
-            set(io.state.get("pending_buckets") or []) | set(new_buckets)
-        )
+        new_buckets |= set(io.state.get("pending_buckets") or [])
     engine._maybe_compact()
     io.set_state(iter=it, pending=pending_next,
-                 pending_buckets=sorted(new_buckets))
+                 pending_buckets=sorted(new_buckets),
+                 **(extra_state or {}))
     io.checkpoint(f"iter-{it:06d}")
-    if prof:
-        mark("commit")
-        prev = t0
-        deltas = {}
-        for label, t in marks:
-            deltas[label] = round(t - prev, 2)
-            prev = t
-        print(f"[profile] iter={it} ready={n_ready} LOCAL {deltas}",
-              flush=True)
-    return counts

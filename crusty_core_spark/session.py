@@ -1,9 +1,10 @@
 """SparkSession factory tuned for the crawl engine.
 
-Local-mode defaults are sized for the sandbox (local[32], 128 GiB); the same
-builder settings apply unchanged on a multi-executor cluster via
-``spark-submit --py-files`` (see scripts/submit.sh) — AQE, Arrow, and adaptive
-skew-join handling are cluster-side features, not local-mode hacks.
+Local-mode defaults follow the host (cores from SPARK_GRAFT_CPUS, heap from
+physical memory); the same builder settings apply unchanged on a
+multi-executor cluster via ``spark-submit --py-files`` (see
+scripts/submit.sh) — AQE, Arrow, and adaptive skew-join handling are
+cluster-side features, not local-mode hacks.
 """
 
 from __future__ import annotations
@@ -38,7 +39,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # Reducer-locality preferences poison cache locality for this
@@ -54,6 +57,14 @@ def get_spark(
         # stage dropped 8.6 s -> 2.4 s. Iteration shuffles here are KB-MB
         # (frontier rows); the cache is GB — locality must follow the cache.
         .config("spark.shuffle.reduceLocality.enabled", "false")
+        # DataFrame debugging captures the Python call site on EVERY
+        # PySpark API call (an active-session lookup, a conf read and a
+        # JVM origin set: three py4j round trips per withColumn/filter/
+        # select). A crawl step builds its plan from thousands of such
+        # calls, so this was over half of its round trips. The cost: an
+        # analysis error no longer names the Python line that built the
+        # failing expression.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     ev = os.environ.get("SPARK_GRAFT_EVENTLOG")
     if ev:
@@ -67,6 +78,18 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _warm_session(spark)
     return spark
+
+
+def _default_driver_mem() -> str:
+    """A quarter of the host's physical memory, within [1 GiB, 48 GiB].
+    In local mode the driver JVM is the whole cluster, and G1 lets garbage
+    pile up until the heap nears its maximum: a fixed 48g heap on a 15 GB
+    host grew one long test session's JVM past the host's memory."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return "%dm" % max(1024, min(48 * 1024, total // 4 // 2**20))
 
 
 def _warm_session(spark: SparkSession) -> None:

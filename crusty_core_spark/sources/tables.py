@@ -59,6 +59,11 @@ except ImportError:  # pragma: no cover - sandbox always has orjson
         return json.dumps(obj, sort_keys=True).encode()
 from pyspark.sql import types as T
 
+#: selected-file bytes up to which ``TableIO.read_partitions`` builds its
+#: DataFrame on the driver (the bound ``bloom.dedup_flag`` uses for its
+#: broadcast backstop)
+LOCAL_READ_MAX_BYTES = 16 * 1024 * 1024
+
 
 class TableIO:
     """Thread-safe: commits from concurrent writer threads serialize on a
@@ -361,21 +366,35 @@ class TableIO:
 
     def read_partitions(self, name: str, values=None) -> DataFrame:
         """Read a partitioned table, pruned to ``values`` (None = all).
-        Reads exactly the selected partitions' files — an O(selected) scan."""
+        Reads exactly the selected partitions' files — an O(selected) scan.
+
+        Selections of at most ``LOCAL_READ_MAX_BYTES`` are served from the
+        driver's Arrow file cache as a local DataFrame: the manifest already
+        names every file, and ``spark.read.parquet`` over a hundred-plus
+        partition dirs starts a parallel file-listing job per read."""
         t = self._tbl(name)
         schema = T.StructType.fromJson(t["schema"])
-        parts = self._parts(name)
-        if values is not None:
-            want = {str(v) for v in values}
-            parts = {k: v for k, v in parts.items() if k in want}
-        paths = [
-            os.path.join(self.root, name, rel)
-            for rels in parts.values()
-            for rel in rels
-        ]
+        paths = self.partition_paths(name, values)
         if not paths:
             return self.spark.createDataFrame([], schema)
+        files = self._parquet_files(paths)
+        if sum(os.path.getsize(f) for f in files) <= LOCAL_READ_MAX_BYTES:
+            return self._local_df(files, schema)
         return self.spark.read.schema(schema).parquet(*paths)
+
+    def _local_df(self, files: list[str], schema: T.StructType) -> DataFrame:
+        """DataFrame over ``files`` built from the Arrow file cache, with
+        the schema a Spark parquet scan reports (every field nullable)."""
+        import pyarrow as pa
+
+        nullable = T.StructType(
+            [T.StructField(f.name, f.dataType, True) for f in schema.fields]
+        )
+        arrow = self._arrow_schema(nullable)
+        tbls = [t.select(arrow.names).cast(arrow)
+                for t in self._read_files(files)]
+        tbl = pa.concat_tables(tbls) if tbls else arrow.empty_table()
+        return self.spark.createDataFrame(tbl, schema=nullable)
 
     def partition_paths(self, name: str, values=None) -> list[str]:
         """Absolute file-system dirs backing the selected partitions (for
@@ -440,6 +459,13 @@ class TableIO:
         cache[path] = tbl
         return tbl
 
+    def _read_files(self, files: list[str]) -> list:
+        """Arrow tables of ``files`` through the file cache (on the shared
+        pool past a handful of files)."""
+        if len(files) > 4:
+            return list(self._io_pool.map(self._read_file_tbl, files))
+        return [self._read_file_tbl(p) for p in files]
+
     def _seed_pdf_cache(self, path: str, arrow_tbl) -> None:
         """Record the Arrow table a just-written parquet file decodes to.
         ``arrow_tbl`` is the exact Table written, so its ``to_pandas()``
@@ -453,6 +479,18 @@ class TableIO:
             cache.clear()
         cache[path] = arrow_tbl
 
+    @staticmethod
+    def _parquet_files(paths: list[str]) -> list[str]:
+        """The parquet files under the data dirs ``paths``, in read order."""
+        files = []
+        for d in paths:
+            if not os.path.isdir(d):
+                continue
+            for f in sorted(os.listdir(d)):
+                if f.endswith(".parquet"):
+                    files.append(os.path.join(d, f))
+        return files
+
     def _read_paths_local(self, paths: list[str], columns=None):
         """Concatenated pandas frame of the parquet files under ``paths``.
 
@@ -463,19 +501,10 @@ class TableIO:
         iterations)."""
         import pyarrow as pa
 
-        files = []
-        for d in paths:
-            if not os.path.isdir(d):
-                continue
-            for f in sorted(os.listdir(d)):
-                if f.endswith(".parquet"):
-                    files.append(os.path.join(d, f))
+        files = self._parquet_files(paths)
         if not files:
             return None
-        if len(files) > 4:
-            tbls = list(self._io_pool.map(self._read_file_tbl, files))
-        else:
-            tbls = [self._read_file_tbl(p) for p in files]
+        tbls = self._read_files(files)
         if columns:
             tbls = [t.select(list(columns)) for t in tbls]
         if len(tbls) == 1:
@@ -496,19 +525,10 @@ class TableIO:
         lists (e.g. the url_seen membership sets): the per-tiny-file
         DataFrame construction was ~1.4 ms × hundreds of incremental
         shard files per crawl, all block-manager overhead."""
-        files = []
-        for d in paths:
-            if not os.path.isdir(d):
-                continue
-            for f in sorted(os.listdir(d)):
-                if f.endswith(".parquet"):
-                    files.append(os.path.join(d, f))
+        files = self._parquet_files(paths)
         if not files:
             return []
-        if len(files) > 4:
-            tbls = list(self._io_pool.map(self._read_file_tbl, files))
-        else:
-            tbls = [self._read_file_tbl(p) for p in files]
+        tbls = self._read_files(files)
         if columns:
             tbls = [t.select(list(columns)) for t in tbls]
         return tbls
@@ -543,7 +563,8 @@ class TableIO:
 
     def _write_pdf_dir(self, name: str, pdf, spark_schema: T.StructType,
                        n_files: int = 1) -> str:
-        """``n_files > 1`` splits the frame into that many row-sliced files
+        """``pdf``: a pandas frame or an Arrow table with the schema's
+        columns. ``n_files > 1`` splits it into that many row-sliced files
         (written concurrently — pyarrow releases the GIL): a fat driver-local
         commit read back by a DISTRIBUTED iteration then scans in parallel
         instead of starting from one single-file partition."""
@@ -557,11 +578,12 @@ class TableIO:
         path = os.path.join(self.root, name, d)
         os.makedirs(path, exist_ok=True)
         arrow = self._arrow_schema(spark_schema)
-        tbl = pa.Table.from_pandas(
-            pdf[[f.name for f in spark_schema.fields]],
-            schema=arrow,
-            preserve_index=False,
-        )
+        names = [f.name for f in spark_schema.fields]
+        if isinstance(pdf, pa.Table):
+            tbl = pdf.select(names).cast(arrow)
+        else:
+            tbl = pa.Table.from_pandas(pdf[names], schema=arrow,
+                                       preserve_index=False)
         k = max(1, min(int(n_files), max(1, tbl.num_rows)))
         if k == 1:
             fp = os.path.join(path, "part-00000.parquet")

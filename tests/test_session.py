@@ -16,3 +16,16 @@ def test_adaptive_and_arrow_enabled(spark):
     assert (
         spark.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
     )
+
+
+def test_dataframe_debugging_disabled(spark):
+    # DataFrame debugging captures the Python call site on every PySpark
+    # API call (three py4j round trips each); a crawl step's plan build
+    # makes thousands of such calls
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
+        == "false"
+    )
+    assert not is_debugging_enabled()
