@@ -37,10 +37,10 @@ Scale notes (the 100 TB design intent — verified locally at small SF):
   head/tail iterations are job-launch-overhead-bound on any cluster size,
   so a scale-out engine needs a local mode for them just like AQE collapses
   tiny shuffles to LocalTableScan. Parity across paths is pinned by
-  tests/test_fastpath.py. A distributed iteration whose commit is one file
-  per table (``_commit_files``) also commits on the driver, through the
-  local path's ``commit_iteration``; tests/test_commit_route.py pins both
-  commit routes to the same tables.
+  tests/test_fastpath.py. Every iteration commits on the driver: a
+  distributed one collects its cached chain output and fetch_log once and
+  commits through the local path's ``commit_iteration``, and a distributed
+  seed through its ``commit_seed``.
 """
 
 from __future__ import annotations
@@ -144,44 +144,10 @@ def _pending_schema():
 
     return PT.StructType.fromDDL(_PENDING_DDL)
 
-#: rows per output file of a distributed iteration's commit, sized by the
-#: pre-iteration pending count (the accepted count is not known before the
-#: writers start). An iteration whose commit fits one file per table
-#: collects its cached results and commits on the driver instead
-#: (local_step.commit_iteration): Spark writer jobs would cost seconds of
-#: fixed floor for a few thousand rows.
-_COMMIT_FILE_ROWS = 10_000
-
-
-def _commit_files(pending: int) -> int:
-    """Output files per table for a distributed commit."""
-    return max(1, min(32, int(pending) // _COMMIT_FILE_ROWS + 1))
-
-
-#: in-flight deferred commits per workdir (join callables). A new engine
-#: taking over the same workdir IN-PROCESS (the kill/resume test pattern)
-#: joins the previous engine's deferred writers before touching the tables;
-#: a real process death needs nothing — the writer threads die with the
-#: process and resume rolls back to the last COMPLETE checkpoint, replaying
-#: the partially-committed iterations deterministically.
-_DEFERRED_JOIN_BY_WORKDIR: dict = {}
-
 #: (spark applicationId, pool width) → resolved local/distributed
 #: crossover rows; the calibration probe costs a few seconds, so engines
 #: sharing a session share the measurement
 _CALIBRATION_CACHE: dict = {}
-
-
-def _drain_workdir(workdir: str) -> str:
-    """Join any in-flight deferred commits another in-process engine still
-    has against this workdir; returns the normalized registry key."""
-    import os as _os
-
-    key = _os.path.abspath(workdir)
-    prev_join = _DEFERRED_JOIN_BY_WORKDIR.pop(key, None)
-    if prev_join is not None:
-        prev_join()
-    return key
 
 
 class CrawlEngine:
@@ -289,10 +255,6 @@ class CrawlEngine:
             self.local_thr: int | None = self._calibrate_threshold()
         else:
             self.local_thr = self.cfg.local_iter_threshold
-        self._workdir_key = _drain_workdir(workdir)
-        #: deferred-commit record of the previous iteration (see
-        #: _commit_chain_out / _join_deferred)
-        self._deferred = None
         self.io = TableIO(spark, workdir)
 
     def _calibrate_threshold(self) -> int:
@@ -453,8 +415,8 @@ class CrawlEngine:
 
         Dispatch mirrors step(): a thin seed list runs driver-local
         (plans/local_step.seed_local — same kernels, same tables) because
-        the distributed seed is pure fixed floor: a cogroup exchange, two
-        collects and five writer jobs for per-row-trivial work. Seeding is
+        the distributed seed is pure fixed floor: a cogroup exchange and a
+        collect for per-row-trivial work. Seeding is
         chain-only (no fetch/extract — roots cost ~30 µs/row vs ~0.6 ms
         for a crawled page), so the cutover sits well above the iteration
         threshold; 8× is conservative against the kernel-cost ratio."""
@@ -513,46 +475,14 @@ class CrawlEngine:
         )
         chain_out = run_chain_stage(chain_input, job_state, self.cfg,
                                     custom_filters=self.custom_task_filters)
-        chain_out.persist()
-        self._sched_counts = {
-            r["action"]: r["n"] for r in self._sched_agg(chain_out).collect()
-        }
-        # DEFERRED seed commit: the writers (chain/job_state/url_seen/Bloom/
-        # job_log) land in the background and are joined by iteration 1's
-        # fetch/extract wave — exactly the per-iteration pipelining model.
-        # The checkpoint freezes at the join, so resume always restores a
-        # COMPLETE seed; an in-process takeover or any table reader drains
-        # first (same crash model as every other deferred iteration — a hard
-        # process death before the join simply re-seeds, which is free).
-        deferred_futs = self._commit_chain_out(
-            chain_out, it=0, remaining=None, fetch_log=None,
-            counts={}, finish_reason="RootRejected")
-        # collect while chain_out is still cached: a recompute would let
-        # Catalyst prune the cogroup input columns out from under bucket_fn
-        seeded_buckets = [
-            r[0]
-            for r in chain_out.filter(F.col("row_kind") == "task")
-            .select(F.pmod(F.col("job_id"), F.lit(N_JOB_BUCKETS)).cast("int"))
-            .distinct().collect()
-        ]
-        self.io.set_state(
-            iter=0,
-            seeded=True,
-            cfg=self.cfg.to_dict(),
-            pending=self._sched_counts.get("accept", 0),
-            pending_buckets=sorted(seeded_buckets),
-        )
-        # next iteration's work queue, served from the cached chain output —
-        # the deferred chain append needn't gate iteration 1 (see _pending_df
-        # and _mem_slice for why this must be plan-flat)
-        self._mem_pending = self._mem_slice(chain_out, 0)
-        self._deferred = {
-            "futures": deferred_futs,
-            "unpersist": [chain_out],
-            "label": "iter-000000",
-        }
-        _DEFERRED_JOIN_BY_WORKDIR[self._workdir_key] = self._join_deferred
+        from crusty_core_spark.plans.local_step import commit_seed
 
+        # one collect; the commit (tables, state, checkpoint) runs on the
+        # driver like the local seed's. Exact ints: no float64 round trip
+        # for null-bearing columns
+        pdf = chain_out.toArrow().to_pandas(integer_object_nulls=True)
+        with self.io.deferred_manifest():
+            commit_seed(self, pdf, exec_local=0)
 
     def _sched_agg(self, chain_out, fam="sched"):
         """Per-action scheduling counts — from detail rows or from the
@@ -640,9 +570,6 @@ class CrawlEngine:
         ):
             from crusty_core_spark.plans.local_step import step_local
 
-            # the local path reads/writes the tables directly (pyarrow) —
-            # the previous iteration's deferred commits must land first
-            self._join_deferred()
             self._last_step_local = True
             return step_local(self, int(self.io.state["iter"]) + 1)
         self._last_step_local = False
@@ -918,19 +845,11 @@ class CrawlEngine:
         # on an empty plan, a pure stage-floor cost on robots-only and drain
         # iterations (the wave-1 count is already paid, so this is free)
 
-        # --- WAVE 1 + deferred-commit join: materialize fetch→classify→
-        #     extract→explode NOW, while the PREVIOUS iteration's deferred
-        #     table commits (job_state/url_seen/Bloom/fetch_log/job_log —
-        #     none of which this wave reads) finish on the executors/driver
-        #     underneath it. Only after both complete does the plan build
-        #     touch the manifest again (job_state partitions, url_seen
-        #     paths, Bloom snapshot). This pipelining removes most of the
-        #     commit phase from the iteration's critical path — the serial
-        #     floor the N→4N ratio pays 4x for (VERDICT r3 #1/#6).
+        # --- WAVE 1: materialize fetch→classify→extract→explode NOW, so
+        #     the probe, pos-shard collect and backstop below read a warm
+        #     cache, and an iteration with zero candidates skips them
         n_cands = cands_raw.count()
         mark("wave1")
-        self._join_deferred()
-        mark("join_deferred")
 
         # --- touched-jobs-only state pruning: this iteration's chain touches
         #     exactly the jobs with ready rows (candidates inherit their
@@ -1221,7 +1140,7 @@ class CrawlEngine:
             *user_cols,
         )
 
-        # ONE materialization wave BEFORE fanning out the commit writers.
+        # ONE materialization wave BEFORE the commit's collects.
         # Concurrent jobs racing to compute the shared persisted plans
         # serialize on executor block locks — a task blocked on an
         # in-progress cached block still occupies its slot, so the fan-out
@@ -1308,137 +1227,40 @@ class CrawlEngine:
             state_kw["deferred_tasks"] = def_rows
         caches = [df for df in (chain_out, cands, cands_raw, parsed, fetched)
                   if df is not None]
-        if _commit_files(int(self.io.state.get("pending", 0))) == 1:
-            # one-file commit: collect the cached results once and commit
-            # on the driver like a local iteration — writes, compaction,
-            # state and checkpoint all land inside this step
-            from crusty_core_spark.plans.local_step import commit_iteration
+        # collect the cached results once and commit on the driver like a
+        # local iteration — writes, compaction, state and checkpoint all
+        # land inside this step. Spark writer jobs cost seconds of fixed
+        # floor per iteration and, deferred under the next step, still
+        # lost to this commit at 24k and 51k pending rows (README,
+        # "Hybrid dispatch")
+        from crusty_core_spark.plans.local_step import commit_iteration
 
-            resolved = resolve_counts()
-            # one manifest dump for the whole commit, as in step_local
-            with self.io.deferred_manifest():
-                commit_iteration(
-                    self, it,
-                    # exact ints: no float64 round trip for null-bearing
-                    # columns
-                    chain_out.toArrow().to_pandas(integer_object_nulls=True),
-                    fetch_log.toArrow(), resolved["counts"],
-                    remaining=(remaining.toPandas() if remaining is not None
-                               else None),
-                    drain=drain, read_bytes=resolved["bytes"]["read"],
-                    write_bytes=resolved["bytes"]["write"], exec_local=0,
-                    t0=t0, deferred_jobs=deferred_jobs, extra_state=state_kw,
-                )
-            for df in caches:
-                df.unpersist()
-            self._mem_pending = None
-            if prof:
-                mark("driver_commit")
-                self._print_profile(it, resolved["counts"], marks)
-            return resolved["counts"]
-        deferred_futs = self._commit_chain_out(
-            chain_out,
-            it=it,
-            remaining=remaining,
-            fetch_log=fetch_log,
-            counts_resolver=resolve_counts,
-            iter_t0=t0,
-            finish_reason="SoftTimeout" if drain else "Complete",
-            deferred_jobs=deferred_jobs,
-        )
-        mark("commit+counts")
         resolved = resolve_counts()
+        # one manifest dump for the whole commit, as in step_local
+        with self.io.deferred_manifest():
+            commit_iteration(
+                self, it,
+                # exact ints: no float64 round trip for null-bearing columns
+                chain_out.toArrow().to_pandas(integer_object_nulls=True),
+                fetch_log.toArrow(), resolved["counts"],
+                remaining=(remaining.toPandas() if remaining is not None
+                           else None),
+                drain=drain, read_bytes=resolved["bytes"]["read"],
+                write_bytes=resolved["bytes"]["write"], exec_local=0,
+                t0=t0, deferred_jobs=deferred_jobs, extra_state=state_kw,
+            )
+        for df in caches:
+            df.unpersist()
         counts = resolved["counts"]
-        new_buckets = resolved["buckets"]
-        n_ready = sum(counts.values())
-        pending = (
-            int(self.io.state.get("pending", 0))
-            - n_ready
-            + self._sched_counts.get("accept", 0)
-        )
-        # next iteration's state-read prune set: exactly the new tasks'
-        # buckets (delay=0: the pending queue IS the new tasks); politeness
-        # keeps leftovers pending, so accumulate (monotone, bounded by
-        # N_JOB_BUCKETS)
-        if cfg.delay_ms > 0:
-            new_buckets = sorted(
-                set(self.io.state.get("pending_buckets") or []) | set(new_buckets)
-            )
-        if def_rows:
-            # deferred jobs' state buckets stay in next iteration's prune set
-            new_buckets = sorted(
-                set(new_buckets)
-                | {j % N_JOB_BUCKETS for j in deferred_jobs}
-            )
-        self.io.set_state(iter=it, pending=pending,
-                          pending_buckets=sorted(new_buckets), **state_kw)
-        # the slow, non-gating writers keep running in the background; the
-        # next distributed iteration joins them after its fetch/extract
-        # wave (maintenance + the frozen checkpoint run at the join — the
-        # checkpoint must contain the COMPLETE iteration). A crash before
-        # the join resumes from the previous checkpoint and replays this
-        # iteration deterministically — the exact crash model an
-        # intra-iteration crash already has.
-        # next iteration's work queue, straight from the cached chain
-        # output (the deferred chain append lands before the checkpoint;
-        # see _pending_df) — politeness mode keeps its explicit table
-        if cfg.delay_ms == 0:
-            mem = self._mem_slice(chain_out, it)
-            if def_rows:
-                mem = mem.unionByName(
-                    self.spark.createDataFrame(def_rows, _pending_schema())
-                )
-            self._mem_pending = mem
-        self._deferred = {
-            "futures": deferred_futs,
-            "unpersist": caches,
-            "label": f"iter-{it:06d}",
-        }
-        _DEFERRED_JOIN_BY_WORKDIR[self._workdir_key] = self._join_deferred
         if prof:
-            mark("state")
-            self._print_profile(it, counts, marks)
+            mark("commit")
+            deltas = {
+                marks[i][0]: round(marks[i][1] - marks[i - 1][1], 2)
+                for i in range(1, len(marks))
+            }
+            print(f"[profile] iter={it} ready={sum(counts.values())} "
+                  f"{deltas}", flush=True)
         return counts
-
-    @staticmethod
-    def _print_profile(it, counts, marks) -> None:
-        deltas = {
-            marks[i][0]: round(marks[i][1] - marks[i - 1][1], 2)
-            for i in range(1, len(marks))
-        }
-        print(f"[profile] iter={it} ready={sum(counts.values())} {deltas}",
-              flush=True)
-
-    def _join_deferred(self) -> None:
-        """Land the previous iteration's deferred commits, release its
-        caches, and finalize it (maintenance + frozen checkpoint).
-
-        Called from: the next distributed iteration AFTER its fetch/extract
-        materialization wave (the overlap window), the local fast path and
-        every public table reader BEFORE they touch the tables, and by a
-        new engine taking over this workdir in-process."""
-        d = self._deferred
-        if d is None:
-            return
-        self._deferred = None
-        # the chain append is part of the landing set, so the table now
-        # holds everything the cached slice held — readers switch to the
-        # table path (the cache backing _mem_pending is released below)
-        self._mem_pending = None
-        _DEFERRED_JOIN_BY_WORKDIR.pop(self._workdir_key, None)
-        for f in d["futures"]:
-            f.result()  # propagate the first writer failure
-        for df in d["unpersist"]:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        # maintenance must never run concurrently with in-flight writers
-        # (orphan GC would delete a dir whose commit hasn't landed), and
-        # the checkpoint must freeze the COMPLETE iteration — both belong
-        # here, strictly after the futures
-        self._maybe_compact()
-        self.io.checkpoint(d["label"])
 
     def _fetch_stage(self, ready: DataFrame) -> DataFrame:
         """One logical fetch (reference task_processor.rs:128-208), two
@@ -1621,284 +1443,7 @@ class CrawlEngine:
 
         return fetched.mapInPandas(apply, schema=schema)
 
-    # ---------------------------------------------------------------- commit
-
-    def _commit_chain_out(self, chain_out, it, remaining, fetch_log,
-                          counts=None, counts_resolver=None,
-                          iter_t0=None, finish_reason="Complete",
-                          touched_shards=None, deferred_jobs=None):
-        """Commit an iteration. Every write is O(this iteration's work):
-
-        - ``chain`` append: tasks/sched/lineage log rows (state rows are
-          excluded — they live in the partitioned ``job_state`` table).
-        - ``job_state``: partition-level overwrite of the TOUCHED job
-          buckets only — touched jobs' new states (from the chain) union the
-          untouched jobs' carried states (JVM anti-join, engine.step);
-          untouched buckets' files stay byte-identical.
-        - ``url_seen``: append of this iteration's accepted URLs, partitioned
-          by host-hash shard so the dedup backstop prunes its scan.
-        - Bloom shards: partition-level overwrite of touched shards.
-
-        The dedup commit-last semantics hold because the chain only emits
-        fresh URLs, so the append IS the MERGE (task_filters.rs:199-211).
-        Independent writes run concurrently as Spark jobs on the
-        persistent writer pool; the returned futures are joined by
-        ``_join_deferred`` (politeness mode's frontier overwrite is the one
-        writer joined here). Used by the distributed seed and by
-        iterations too big for the driver commit (``_commit_files`` > 1).
-        When ``counts_resolver`` is given, the writers that need no counts
-        start immediately and only the Bloom commit + metrics row wait on
-        the resolver."""
-        from crusty_core_spark.operators import bloom
-
-        io = self.io
-        tasks_out = chain_out.filter(F.col("row_kind") == "task")
-        # small iterations → few output files: every writer below reads the
-        # persisted chain_out, so coalescing tiny writes costs nothing and
-        # cuts the per-iteration file count (the serial floor) sharply; big
-        # iterations keep full write parallelism. With the counts collect
-        # still in flight the accepted count isn't known yet — the
-        # pre-iteration pending size (maintained arithmetically) is the
-        # stand-in: in the delay=0 regime pending IS last iteration's accept
-        # count, so it tracks the write volume within one branching factor,
-        # and a misestimate only shifts file sizes (compaction bounds counts).
-        if counts_resolver is not None:
-            w_parts = _commit_files(int(self.io.state.get("pending", 0)))
-        else:
-            n_accepted = getattr(self, "_sched_counts", {}).get("accept", 0) or 0
-            w_parts = max(1, min(32, int(n_accepted) // 20_000 + 1))
-        # Multi-file commits use every core: the row-count formula alone
-        # produced 2-4 write tasks on medium iterations, and a 4-task job on
-        # a 16-core cluster leaves 12 slots idle for its whole wall — the
-        # writer tail then extends past the overlap window and the N→4N
-        # ratio pays it 4x (event-log: iter-2 writers ran 2.7-5.2 s each at
-        # 4 executors as 4-task jobs). Single-file commits stay single-file
-        # (the thin-iteration floor is file count, not parallelism).
-        if w_parts > 1:
-            w_parts = max(w_parts, min(
-                int(self.spark.sparkContext.defaultParallelism), 16))
-
-        def _bloom_update():
-            if counts_resolver is not None:
-                res = counts_resolver()
-                shards = res["shards"]
-                n_acc = res["sched"].get("accept", 0)
-            else:
-                shards = touched_shards
-                n_acc = getattr(self, "_sched_counts", {}).get("accept", 0) or 0
-            bloom.update(
-                tasks_out.select("job_id", "url", "host"), io, self.cfg,
-                touched_ids=shards, n_accepted=n_acc,
-            )
-
-        def _job_state_write():
-            states = chain_out.filter(F.col("row_kind") == "state").select(
-                *_STATE_COLS
-            )
-            io.overwrite_partitions(
-                "job_state",
-                states.withColumn(
-                    "_bucket",
-                    F.pmod(F.col("job_id"), F.lit(N_JOB_BUCKETS)).cast("int"),
-                ),
-                "_bucket",
-                n_files=w_parts,
-            )
-
-        def _url_seen_write():
-            io.append_partitions(
-                "url_seen",
-                tasks_out.select(
-                    "job_id",
-                    "url",
-                    F.lit(it).cast("long").alias("added_iter"),
-                    bloom.shard_id_col(
-                        F.col("host"), self.cfg.n_bloom_shards
-                    ).alias("shard"),
-                ),
-                "shard",
-                n_files=w_parts,
-            )
-
-        if self.cfg.delay_ms > 0:
-            # politeness mode keeps an explicit compact queue (leftover ∪ new)
-            tasks = self._tasks_slice(chain_out, it)
-            if remaining is not None:
-                tasks = remaining.unionByName(tasks)
-        else:
-            tasks = None
-
-        def _job_log_write():
-            # per-job Finished record (task_scheduler.rs:158-167): a job
-            # touched this iteration with an empty frontier afterwards is
-            # done. delay=0: the chain tags such jobs "touched_done" (zero
-            # tasks emitted — and the next frontier IS the new tasks), so
-            # Finished records are a pure filter over the cached chain
-            # output: no distinct, no anti-join, no shuffle. Politeness
-            # mode keeps the join (leftover due/not-due rows can keep a
-            # zero-emission job alive).
-            state_rows = chain_out.filter(F.col("row_kind") == "state")
-            if tasks is None:
-                finished = state_rows.filter(
-                    F.col("action") == "touched_done"
-                ).select("job_id", "budget_used", "resp_counter",
-                         "seq_counter")
-                if deferred_jobs:
-                    # a job with a straggler carried to the next iteration
-                    # still has a frontier — not Finished (politeness mode
-                    # needs nothing: its `tasks` union carries the row)
-                    finished = finished.filter(
-                        ~F.col("job_id").isin(deferred_jobs)
-                    )
-            else:
-                touched = state_rows.filter(
-                    F.col("action").isin("touched", "touched_done")
-                ).select("job_id", "budget_used", "resp_counter",
-                         "seq_counter")
-                finished = touched.join(
-                    tasks.select("job_id").distinct(), "job_id", "left_anti"
-                )
-            io.append(
-                "job_log",
-                # repartition, NOT coalesce: coalesce(1) would pull the
-                # whole 16-partition cached scan through ONE task (3/4 of
-                # the blocks cross-process at 4 executors — event-logged at
-                # 3.7 s single-task); repartition keeps the scan parallel
-                # and only the tiny finished-rows result crosses the shuffle
-                finished.select(
-                    "job_id",
-                    F.lit(it).cast("long").alias("iter"),
-                    F.lit(finish_reason).alias("reason"),
-                    "budget_used",
-                    "resp_counter",
-                    "seq_counter",
-                ).repartition(1),
-            )
-
-        def _chain_append():
-            io.append(
-                "chain",
-                # repartition for the same reason as job_log: a parallel
-                # cached scan feeding w_parts write tasks, instead of
-                # w_parts tasks each dragging cache blocks cross-process
-                chain_out.filter(F.col("row_kind") != "state").withColumn(
-                    "iter", F.lit(it).cast("long")
-                ).repartition(w_parts),
-            )
-
-        # SYNC writers gate the NEXT iteration's plan build from its first
-        # line; everything else is DEFERRABLE — its first reader is the next
-        # iteration's dedup/chain plan build, which happens only after that
-        # iteration's fetch/extract wave (see step()'s wave-1 join). The
-        # chain append itself is deferrable too: the next iteration's work
-        # queue is served from the still-cached chain output (_mem_pending /
-        # _pending_df), so only the politeness-mode compact frontier
-        # overwrite remains a sync gate (its table IS the queue).
-        sync_writers = []
-        defer_writers = [_chain_append, _job_state_write, _url_seen_write,
-                         _job_log_write]
-        if tasks is not None:
-            sync_writers.append(
-                lambda: io.overwrite(
-                    "frontier_pending", tasks.repartition(w_parts))
-            )
-        if self.cfg.use_bloom:
-            defer_writers.append(_bloom_update)
-        if fetch_log is not None:
-            defer_writers.append(
-                lambda: io.append("fetch_log", fetch_log.repartition(w_parts))
-            )
-        from concurrent.futures import ThreadPoolExecutor
-
-        import os as _os
-
-        prof = _os.environ.get("SPARK_CRAWL_PROFILE", "0") != "0"
-
-        def timed(w):
-            if not prof:
-                return w
-            name = getattr(w, "__name__", "chain/fetch/frontier")
-
-            def run():
-                t = time.time()
-                w()
-                print(f"[commit] {name}: {time.time() - t:.2f}", flush=True)
-
-            return run
-
-        # persistent pool: the futures outlive this call by design
-        if getattr(self, "_writer_pool", None) is None:
-            self._writer_pool = ThreadPoolExecutor(
-                max_workers=8, thread_name_prefix="commit"
-            )
-        deferred_futs = [
-            self._writer_pool.submit(timed(w)) for w in defer_writers
-        ]
-        if sync_writers:
-            with ThreadPoolExecutor(max_workers=len(sync_writers)) as ex:
-                for f in [ex.submit(timed(w)) for w in sync_writers]:
-                    f.result()
-
-        # metrics accumulate in the manifest (checkpointed) and are
-        # materialized as a table by flush_metrics() — avoids a tiny table
-        # write per iteration
-        if counts_resolver is not None:
-            res = counts_resolver()  # already resolved by the Bloom writer
-            counts = res["counts"]
-            self._sched_counts = res["sched"]
-            self._io_bytes = res["bytes"]
-        sched_counts = getattr(self, "_sched_counts", {})
-        dedup_stats = getattr(self, "_dedup_stats", {})
-        io_bytes = getattr(self, "_io_bytes", {})
-        n_ready = sum(counts.values())
-        # wall measured HERE — after the table writers and the counts
-        # resolution — so per-iteration walls in the metrics table cover the
-        # full iteration (fetch→chain→commit), not just the plan-build part;
-        # scaling analyses (bench_scaling.py fat-iteration split) depend on it
-        wall_ms = (
-            int((time.time() - iter_t0) * 1000) if iter_t0 is not None else 0
-        )
-        row = [
-            it,
-            n_ready,
-            counts.get("processed", 0),
-            sum(v for k, v in counts.items() if k.startswith("error")),
-            sum(sched_counts.values()),
-            sched_counts.get("accept", 0),
-            sched_counts.get("skip", 0),
-            sched_counts.get("term", 0),
-            io_bytes.get("read", 0),
-            io_bytes.get("write", 0),
-            wall_ms,
-            dedup_stats.get("dedup_shards_read", 0),
-            dedup_stats.get("dedup_read_bytes", 0),
-            0,  # exec_local: distributed plan
-        ]
-        with io._lock:  # deferred writers may be serializing the manifest
-            buf = list(io.state.get("metrics_buffer", []))
-            buf.append(row)
-            io.state["metrics_buffer"] = buf
-        return deferred_futs
-
     # ----------------------------------------------------------- run/readers
-
-    def _mem_slice(self, chain_out, it) -> DataFrame:
-        """The next iteration's pending queue as a PLAN-FLAT DataFrame over
-        the cached chain output.
-
-        ``localCheckpoint(eager=False)`` makes the logical plan a LogicalRDD
-        immediately — without it, every iteration's plan would nest the
-        previous iteration's full plan (the table round-trip used to be the
-        lineage cut), growing analysis/AQE-plan-string cost without bound
-        over a long crawl. Lazy: the RDD materializes from the still-cached
-        chain_out inside the next iteration's wave-1 job — no extra job, and
-        the blocks are dropped with the reference one iteration later. (The
-        localCheckpoint caveat — blocks lost with an executor are not
-        recomputable — matches the engine's crash model: resume replays the
-        iteration from the last complete table checkpoint.)"""
-        return self._tasks_slice(
-            chain_out.filter(F.col("row_kind") == "task"), it
-        ).localCheckpoint(eager=False)
 
     def _tasks_slice(self, chain_out, it) -> DataFrame:
         return chain_out.filter(F.col("row_kind") == "task").select(
@@ -1911,18 +1456,10 @@ class CrawlEngine:
 
     def _pending_df(self, it: int) -> DataFrame:
         """The live work queue. delay=0: exactly the tasks accepted last
-        iteration — served from the previous iteration's still-cached chain
-        output when this engine produced it (so the deferred chain append
-        never gates the next iteration's plan build), falling back to the
-        table's last append (fresh/resumed engines, post-local iterations);
-        politeness mode: the explicit compact frontier_pending table."""
+        iteration, the chain table's last append; politeness mode: the
+        explicit compact frontier_pending table."""
         if self.cfg.delay_ms > 0:
             pending = self.io.read("frontier_pending")
-        elif getattr(self, "_mem_pending", None) is not None:
-            # backed by the persisted chain_out of the previous iteration —
-            # valid until _join_deferred unpersists it, which happens only
-            # AFTER this iteration's wave-1 materialization has consumed it
-            return self._mem_pending
         else:
             last = self.io.read_last_append("chain")
             pending = self._tasks_slice(
@@ -1930,9 +1467,8 @@ class CrawlEngine:
                 it - 1,
             )
             # straggler carry-overs (live fetch deadline): their task rows
-            # live in OLDER chain appends — a fresh/resumed engine re-pends
-            # them from the manifest state (the in-memory path above
-            # already unioned them at step end)
+            # live in OLDER chain appends — re-pended from the manifest
+            # state
             def_rows = self.io.state.get("deferred_tasks") or []
             if def_rows:
                 pending = pending.unionByName(
@@ -1962,14 +1498,12 @@ class CrawlEngine:
     def _job_state_df(self) -> DataFrame:
         """All jobs' current states (the partitioned job_state table —
         per-iteration commits touch only the active buckets)."""
-        self._join_deferred()
         return self.io.read_partitions("job_state").select(*_STATE_COLS)
 
     def url_seen_df(self) -> DataFrame:
         """The committed URL-seen set (commit-last semantics, one row per
         (job_id, url)) — the dedicated host-hash-partitioned table, so the
         per-iteration dedup backstop prunes its scan to touched shards."""
-        self._join_deferred()
         return self.io.read_partitions("url_seen").select(
             "job_id", "url", "added_iter"
         )
@@ -1981,18 +1515,15 @@ class CrawlEngine:
     def job_log_df(self) -> DataFrame:
         """Per-job Finished records (JobStatus::Finished analogue,
         types.rs:325-328): one row per job on completion/root-rejection."""
-        self._join_deferred()
         return self.io.read("job_log")
 
     def sched_log_df(self) -> DataFrame:
-        self._join_deferred()
         return self.io.read("chain").filter(
             F.col("row_kind") == "sched"
         ).select("iter", "job_id", "parent_seq_num", "url", "depth",
                  "link_pos", "action", "filter")
 
     def lineage_df(self) -> DataFrame:
-        self._join_deferred()
         return self.io.read("chain").filter(
             F.col("row_kind") == "lineage"
         ).select("job_id", "url", "seed_url", "depth", "discovered_by", "iter")
@@ -2005,7 +1536,6 @@ class CrawlEngine:
         import pandas as pd
         from pyspark.sql import types as T
 
-        self._join_deferred()
         buf = self.io.state.get("metrics_buffer", [])
         schema = T.StructType.fromDDL(S.METRICS)
         cols = [f.name for f in schema.fields]
@@ -2040,9 +1570,6 @@ class CrawlEngine:
                hosts: DataFrame | None = None) -> "CrawlEngine":
         """Restore from the last complete checkpoint (kill-safe: a crash
         mid-iteration rolls back to the previous iteration's manifest)."""
-        # in-process takeover: land the previous engine's deferred commits
-        # (incl. its final checkpoint) BEFORE choosing the restore point
-        _drain_workdir(workdir)
         io = TableIO(spark, workdir)
         cks = io.list_checkpoints()
         if not cks:

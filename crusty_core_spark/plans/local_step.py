@@ -77,10 +77,9 @@ _POOL_N = None
 
 #: shared commit thread pool — the per-iteration table commits (chain /
 #: job_state / url_seen / bloom / fetch_log / job_log / frontier) are
-#: independent tables whose writes serialize only on the manifest lock,
-#: exactly like the distributed path's deferred commit writers
-#: (engine._commit_chain_out). pyarrow's encode/write releases the GIL,
-#: so a handful of threads overlap the per-file metadata floors.
+#: independent tables whose writes serialize only on the manifest lock.
+#: pyarrow's encode/write releases the GIL, so a handful of threads
+#: overlap the per-file metadata floors.
 _COMMIT_POOL = None
 
 
@@ -584,10 +583,11 @@ def seed_local(engine, seed_pairs: list[tuple[int, str]]) -> None:
     ``CrawlEngine.seed`` is a chain-only iteration (no fetch, no extract):
     root candidates fold through the exact filter chain and the results
     land in the same tables. Running that through Spark costs the cogroup
-    exchange plus two collects plus five table-writer jobs — seconds of
-    fixed floor for what is per-row trivial work (measured: 2.8 s
-    foreground + ~1.8 s of deferred writers landing inside iteration 1,
-    for a 1 200-seed crawl whose local seed takes ~0.1 s). The same floor
+    exchange and a collect — seconds of fixed floor for what is per-row
+    trivial work (measured when the distributed seed still committed with
+    five Spark writer jobs: 2.8 s foreground + ~1.8 s of writers landing
+    inside iteration 1, for a 1 200-seed crawl whose local seed takes
+    ~0.1 s). The same floor
     exists on a real cluster's driver, so a scale-out engine wants the
     thin-seed fast path just like the thin-iteration one.
 
@@ -659,8 +659,6 @@ def _shard_map_worker(args):
 
 
 def _seed_local_inner(engine, seed_pairs, cfg, io, re):
-    from pyspark.sql import types as T
-
     from crusty_core_spark.plans import schemas as S
 
     n_workers_seed = cfg.resolved_local_workers()
@@ -746,7 +744,21 @@ def _seed_local_inner(engine, seed_pairs, cfg, io, re):
         chain_out = fn((0,), chain_in, states)
     if not len(chain_out):
         chain_out = pd.DataFrame(columns=S.CHAIN_OUT_COLS)
+    commit_seed(engine, chain_out, exec_local=1)
 
+
+def commit_seed(engine, chain_out, exec_local: int) -> None:
+    """Commit iteration 0 from the driver-resident chain output of the
+    root candidates: the table writes, the metrics row, state and the
+    checkpoint. Both seed paths end here: the driver-local seed, and the
+    distributed seed, which collects its chain stage's output once."""
+    from pyspark.sql import types as T
+
+    from crusty_core_spark.plans import schemas as S
+
+    cfg = engine.cfg
+    io = engine.io
+    n_workers_seed = cfg.resolved_local_workers()
     # --- sched counters (mirror of _sched_agg)
     if cfg.sched_log_detail:
         sched_counts = (
@@ -765,7 +777,7 @@ def _seed_local_inner(engine, seed_pairs, cfg, io, re):
             return io.schema(name)
         return _ddl(ddl)
 
-    # --- commits (same tables, same layout as the distributed seed)
+    # --- commits (the same tables and layout as an iteration's commit)
     new_tasks = chain_out[chain_out["row_kind"] == "task"]
     log_rows = chain_out[chain_out["row_kind"] != "state"].assign(iter=0)
     # an existing chain table's schema already carries 'iter' (appended at
@@ -778,8 +790,17 @@ def _seed_local_inner(engine, seed_pairs, cfg, io, re):
             list(_ddl(S.CHAIN_OUT)) + [T.StructField("iter", T.LongType())]
         )
     )
+    hosts_list = new_tasks["host"].tolist()
+    uniq_hosts = list(set(hosts_list))
+    # host -> shard pooled above the chain-fold threshold (pure-python
+    # xxhash64 twin, ~14 µs/host serial — 1.4 s of a 100k-host seed)
+    shard_pool = (_get_pool(n_workers_seed)
+                  if n_workers_seed > 1 and len(uniq_hosts) >= 2000 else None)
     # independent tables commit concurrently (same pattern as step_local's
-    # commit block); all futures join before the seed checkpoint
+    # commit block); all futures join before the seed checkpoint. Both
+    # fork-pool uses are resolved before the first writer starts: a fork
+    # while commit threads run would copy their held locks.
+    bloom_pool = _bloom_pool(cfg, len(new_tasks))
     commit_futs = []
     _submit = _commit_pool().submit
     commit_futs.append(_submit(
@@ -808,11 +829,7 @@ def _seed_local_inner(engine, seed_pairs, cfg, io, re):
         "job_state", states_out, "_bucket", js_schema,
     ))
 
-    hosts_list = new_tasks["host"].tolist()
-    uniq_hosts = list(set(hosts_list))
-    # host -> shard pooled above the chain-fold threshold (pure-python
-    # xxhash64 twin, ~14 µs/host serial — 1.4 s of a 100k-host seed)
-    if n_workers_seed > 1 and len(uniq_hosts) >= 2000:
+    if shard_pool is not None:
         import numpy as np
 
         chunks = [
@@ -821,7 +838,7 @@ def _seed_local_inner(engine, seed_pairs, cfg, io, re):
                                      n_workers_seed) if len(ix)
         ]
         shard_by_host = {}
-        for part in _get_pool(n_workers_seed).map(_shard_map_worker, chunks):
+        for part in shard_pool.map(_shard_map_worker, chunks):
             shard_by_host.update(part)
     else:
         shard_by_host = {
@@ -844,7 +861,7 @@ def _seed_local_inner(engine, seed_pairs, cfg, io, re):
 
     if cfg.use_bloom and len(new_tasks):
         commit_futs.append(_submit(
-            _bloom_commit, io, cfg, _bloom_pool(cfg, len(new_tasks)),
+            _bloom_commit, io, cfg, bloom_pool,
             new_tasks["job_id"].tolist(), new_tasks["url"].tolist(),
             hosts_list, shard_by_host,
         ))
@@ -884,8 +901,7 @@ def _seed_local_inner(engine, seed_pairs, cfg, io, re):
     for f in commit_futs:  # join before the seed checkpoint
         f.result()
 
-    # --- metrics row + state + checkpoint (same shape as the Spark seed,
-    #     exec_local flagged)
+    # --- metrics row + state + checkpoint
     row = [
         0, 0, 0, 0,
         sum(engine._sched_counts.values()),
@@ -893,7 +909,7 @@ def _seed_local_inner(engine, seed_pairs, cfg, io, re):
         engine._sched_counts.get("skip", 0),
         engine._sched_counts.get("term", 0),
         0, 0, 0, 0, 0,
-        1,
+        int(exec_local),
     ]
     buf = list(io.state.get("metrics_buffer", []))
     buf.append(row)
@@ -1645,9 +1661,8 @@ def commit_iteration(engine, it: int, chain_out, fetch_log, counts: dict,
     """Commit one crawl iteration from driver-resident results: the table
     writes, the metrics row, maintenance, state and the checkpoint.
 
-    Both paths end here: every driver-local iteration, and a distributed
-    iteration small enough that its commit is one file per table
-    (``engine._commit_files``), which collects its cached chain output and
+    Both paths end here: every driver-local iteration, and every
+    distributed iteration, which collects its cached chain output and
     fetch_log once and hands them over. ``chain_out``: the fold's output
     frame (CHAIN_OUT rows); ``fetch_log``: a pandas frame or Arrow table
     of fetch_log rows; ``counts``: fetch action counts; ``remaining``:
@@ -1681,10 +1696,12 @@ def commit_iteration(engine, it: int, chain_out, fetch_log, counts: dict,
     }
 
     # --- commits: pyarrow through the same TableIO manifest. Independent
-    # tables commit CONCURRENTLY (the same pattern as the distributed
-    # path's deferred commit writers): each write is submitted as soon as
-    # its input frame exists, all are joined before set_state/checkpoint —
+    # tables commit CONCURRENTLY: each write is submitted as soon as its
+    # input frame exists, all are joined before set_state/checkpoint —
     # the durability point — so the crash/recovery model is unchanged.
+    # The Bloom fork pool is resolved before the first writer starts: a
+    # fork while commit threads run would copy their held locks.
+    bloom_pool = _bloom_pool(cfg, len(new_tasks))
     commit_futs = []
     _submit = _commit_pool().submit
     # boolean-mask selection already copies; assign() adds the column
@@ -1722,7 +1739,7 @@ def commit_iteration(engine, it: int, chain_out, fetch_log, counts: dict,
 
     if cfg.use_bloom and len(new_tasks):
         commit_futs.append(_submit(
-            _bloom_commit, io, cfg, _bloom_pool(cfg, len(new_tasks)),
+            _bloom_commit, io, cfg, bloom_pool,
             new_tasks["job_id"].tolist(), new_tasks["url"].tolist(),
             hosts_list, shard_by_host,
         ))

@@ -61,7 +61,10 @@ from pyspark.sql import types as T
 
 #: selected-file bytes up to which ``TableIO.read_partitions`` builds its
 #: DataFrame on the driver (the bound ``bloom.dedup_flag`` uses for its
-#: broadcast backstop)
+#: broadcast backstop). Read + count + group-by over 1,024 files of a
+#: 128-partition table, 4 vCPUs: 0.6 s against 5.7 s for the parquet scan
+#: at 3.5 MB, 1.4 s against 5.1 s at 12 MB, 5.2 s against 4.9 s at 47 MB.
+#: The bound also caps what one read pins in driver memory.
 LOCAL_READ_MAX_BYTES = 16 * 1024 * 1024
 
 

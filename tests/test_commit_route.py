@@ -1,13 +1,14 @@
-"""The driver commit route of a small distributed iteration, and the
-driver-built partition reads.
+"""The driver commit of a distributed iteration, and the driver-built
+partition reads.
 
-A distributed iteration whose commit is one file per table collects its
-cached chain output and fetch_log and commits them on the driver through
-``local_step.commit_iteration`` (the local path's commit); bigger ones keep
-the deferred Spark writers. ``TableIO.read_partitions`` serves small
+A distributed iteration collects its cached chain output and fetch_log
+once and commits them on the driver through ``local_step.commit_iteration``
+(the local path's commit); a distributed seed commits through
+``local_step.commit_seed``. ``TableIO.read_partitions`` serves small
 selections from the driver's Arrow file cache instead of a Spark parquet
-scan. These tests pin both routes to the same results and check the
-mechanism by counting Spark jobs, not by timing.
+scan. Path parity (distributed against local) is pinned by
+tests/test_fastpath.py; these tests check the mechanisms by counting Spark
+jobs and watching the fork pool, not by timing.
 """
 
 from __future__ import annotations
@@ -18,7 +19,6 @@ import uuid
 from pyspark.sql import functions as F
 
 from crusty_core_spark.config import CrawlConfig
-from crusty_core_spark.plans import engine as engine_mod
 from crusty_core_spark.plans import local_step
 from crusty_core_spark.plans.engine import CrawlEngine
 from crusty_core_spark.sources import tables
@@ -118,112 +118,61 @@ def test_read_partitions_arrow_route_equals_spark(spark, workdir,
 
 # ------------------------------------------------------------- commit route
 
-def _crawl(spark, wd, rows, seeds, cfg, driver_route: bool, monkeypatch,
-           max_iterations=None):
-    """A whole crawl with every distributed iteration's commit forced onto
-    one route by the module-level row boundary."""
-    with monkeypatch.context() as m:
-        m.setattr(engine_mod, "_COMMIT_FILE_ROWS",
-                  10**9 if driver_route else 1)
-        eng = CrawlEngine(spark, pages_df(spark, rows), wd, cfg)
-        eng.seed(seeds)
-        stats = eng.run(max_iterations=max_iterations)
-    assert stats["dist_iters"] > 0 and stats["local_iters"] == 0
-    return eng
-
-
-def _snapshot(eng):
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    io = eng.io
-    metrics = eng.flush_metrics()
-    return {
-        "fetch_log": rows(io.read("fetch_log")),
-        "url_seen": rows(eng.url_seen_df()),
-        "job_state": rows(eng._job_state_df()),
-        "job_log": rows(eng.job_log_df()),
-        "chain": rows(io.read("chain")),
-        "bloom": rows(io.read_partitions("url_seen_shards")),
-        # dedup_read_bytes is the size of the url_seen files the backstop
-        # scanned, which depends on the writer's encoding (Spark's zstd
-        # files against the pyarrow twins'), not on what they hold
-        "metrics": rows(metrics.drop("wall_ms", "dedup_read_bytes")),
-        "state": {k: io.state.get(k)
-                  for k in ("iter", "pending", "pending_buckets")},
-    }
-
-
-def _assert_same(a: dict, b: dict) -> None:
-    assert a.keys() == b.keys()
-    for k in a:
-        assert a[k] == b[k], (k, [x for x in a[k] if x not in b[k]][:3],
-                              [x for x in b[k] if x not in a[k]][:3])
-
-
-def _resumed(spark, eng, rows):
-    res = CrawlEngine.resume(spark, pages_df(spark, rows), eng.io.root)
-    return {
-        "url_seen": sorted(tuple(r) for r in res.url_seen_df().collect()),
-        "job_state": sorted(tuple(r) for r in res._job_state_df().collect()),
-        "pending": res.pending_count(),
-        "iter": res.io.state["iter"],
-    }
-
-
-def test_commit_routes_identical(spark, workdir, monkeypatch):
+def test_distributed_commit_forks_before_writers(spark, workdir,
+                                                 monkeypatch):
+    """The Bloom positions go through the fork pool on every iteration with
+    accepted tasks. The pool must be resolved on the step's thread while no
+    commit-pool writer runs, never lazily from a commit-pool thread: a
+    fork copies the locks the running threads hold."""
     spec = CorpusSpec(n_hosts=5, base_pages_per_host=10, seed=31)
     rows, seeds = gen_corpus(spec)
-    # the Bloom positions go through the fork pool on every iteration with
-    # accepted tasks; the pool must be forked on the step's thread, never
-    # lazily from a commit-pool thread
-    forks = []
+    running = []  # commit-pool tasks started and not yet finished
+    calls = []  # (main thread?, writers running, forked?) per pool use
     get_pool = local_step._get_pool
+    commit_pool = local_step._commit_pool()
+
+    class RecordingCommitPool:
+        def submit(self, fn, *args, **kw):
+            def run():
+                running.append(fn)
+                try:
+                    return fn(*args, **kw)
+                finally:
+                    running.remove(fn)
+
+            return commit_pool.submit(run)
 
     def recording_get_pool(n):
-        forks.append(threading.current_thread() is threading.main_thread())
+        calls.append((threading.current_thread() is threading.main_thread(),
+                      len(running), local_step._POOL is None))
         return get_pool(n)
 
+    monkeypatch.setattr(local_step, "_commit_pool", RecordingCommitPool)
     monkeypatch.setattr(local_step, "_get_pool", recording_get_pool)
     monkeypatch.setattr(local_step, "_BLOOM_POOL_MIN", 1)
-    if local_step._POOL is not None:
-        local_step._POOL.terminate()
-        local_step._POOL = local_step._POOL_N = None
+    # this test's own pool, forked inside the crawl; the session's pool is
+    # restored untouched afterwards
+    monkeypatch.setattr(local_step, "_POOL", None)
+    monkeypatch.setattr(local_step, "_POOL_N", None)
 
     cfg = CrawlConfig(local_iter_threshold=0, local_workers=2)
-    spark_route = _crawl(spark, workdir + "/s", rows, seeds, cfg, False,
-                         monkeypatch)
-    forks.clear()
-    driver_route = _crawl(spark, workdir + "/d", rows, seeds, cfg, True,
-                          monkeypatch)
-    assert forks and all(forks)
-    snap = _snapshot(driver_route)
-    _assert_same(snap, _snapshot(spark_route))
-    assert len(snap["fetch_log"]) > 0 and len(snap["bloom"]) > 0
-    assert _resumed(spark, driver_route, rows) == _resumed(
-        spark, spark_route, rows)
+    try:
+        eng = CrawlEngine(spark, pages_df(spark, rows), workdir, cfg)
+        eng.seed(seeds)
+        stats = eng.run()
+    finally:
+        if local_step._POOL is not None:
+            local_step._POOL.terminate()
+    assert stats["dist_iters"] > 0 and stats["local_iters"] == 0
+    assert any(forked for _, _, forked in calls)
+    assert all(main and n_running == 0 for main, n_running, _ in calls)
+    assert eng.io.read_partitions("url_seen_shards").count() > 0
 
 
-def test_commit_routes_identical_politeness(spark, workdir, monkeypatch):
-    spec = CorpusSpec(n_hosts=3, base_pages_per_host=8, seed=17)
-    rows, seeds = gen_corpus(spec)
-    cfg = CrawlConfig(local_iter_threshold=0, delay_ms=1000,
-                      concurrency_per_host=3)
-    spark_route = _crawl(spark, workdir + "/s", rows, seeds, cfg, False,
-                         monkeypatch, max_iterations=5)
-    driver_route = _crawl(spark, workdir + "/d", rows, seeds, cfg, True,
-                          monkeypatch, max_iterations=5)
-    snap = _snapshot(driver_route)
-    _assert_same(snap, _snapshot(spark_route))
-    assert snap["state"]["pending"] > 0  # leftovers carried in the queue
-    assert _resumed(spark, driver_route, rows) == _resumed(
-        spark, spark_route, rows)
-
-
-def test_local_step_after_driver_commit_starts_no_job(spark, workdir):
-    """A small distributed iteration lands its whole commit inside its own
-    step, so the local step after it (point-fetch client: no fetch join)
-    starts no Spark job — nothing deferred is left to join."""
+def test_local_step_after_distributed_starts_no_job(spark, workdir):
+    """A distributed iteration lands its whole commit inside its own step,
+    so the local step after it (point-fetch client: no fetch join) starts
+    no Spark job — no writer is left to join."""
     import pandas as pd
 
     spec = CorpusSpec(n_hosts=4, base_pages_per_host=10, seed=5)
@@ -244,7 +193,7 @@ def test_local_step_after_driver_commit_starts_no_job(spark, workdir):
     eng.step()  # local
     eng.local_thr = 0
     eng.step()  # distributed, committed on the driver
-    assert not eng._last_step_local and eng._deferred is None
+    assert not eng._last_step_local
     assert eng.io.list_checkpoints()[-1].endswith("ckpt-iter-000002.json")
     assert eng.pending_count() > 0
     eng.local_thr = 10**9

@@ -198,8 +198,6 @@ def test_seed_local_vs_distributed(spark, workdir):
                                 workdir + f"/l{tag}", mk(20000))
             eng_d.seed(seeds)
             eng_l.seed(seeds)
-            for eng in (eng_d, eng_l):
-                eng._join_deferred()
 
             def snap(eng):
                 chain = sorted(
@@ -254,7 +252,7 @@ def test_seed_local_pooled_parity_and_reseed(spark, workdir):
     branches previously ran only below the pool thresholds in tests, while
     the fast-path cap admits up to 8×local_thr seeds through them).
     Also pins the crash-recovery re-seed: a second seed into a workdir
-    whose chain table already exists (the deferred chain append landed
+    whose chain table already exists (the chain append landed
     before a hard process death) must not raise — the fresh-table DDL
     appends 'iter' but an existing table's schema already carries it."""
     n = 2_500
@@ -265,8 +263,6 @@ def test_seed_local_pooled_parity_and_reseed(spark, workdir):
                         CrawlConfig(local_iter_threshold=20_000))
     eng_d.seed(seeds)
     eng_l.seed(seeds)
-    for eng in (eng_d, eng_l):
-        eng._join_deferred()
 
     def snap(eng):
         chain = sorted(
@@ -287,7 +283,6 @@ def test_seed_local_pooled_parity_and_reseed(spark, workdir):
     eng_r = CrawlEngine(spark, None, workdir + "/l",
                         CrawlConfig(local_iter_threshold=20_000))
     eng_r.seed([(9_000_000 + i, f"http://late{i}.example/") for i in range(5)])
-    eng_r._join_deferred()
     sch = eng_r.io.schema("chain")
     assert [f.name for f in sch.fields].count("iter") == 1
     assert eng_r.url_seen_df().count() == n + 5

@@ -29,3 +29,25 @@ def test_dataframe_debugging_disabled(spark):
         == "false"
     )
     assert not is_debugging_enabled()
+
+
+def test_default_driver_mem_follows_host(monkeypatch):
+    # a quarter of physical memory, clamped to [1 GiB, 48 GiB]; the fixed
+    # 48g it replaces let one long local session's JVM outgrow a 15 GB host
+    import os
+
+    from crusty_core_spark import session
+
+    page = 4096
+
+    def host(gib):
+        pages = gib * 2**30 // page
+        monkeypatch.setattr(
+            os, "sysconf",
+            lambda k: {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": pages}[k])
+        return session._default_driver_mem()
+
+    assert host(2) == "1024m"
+    assert host(16) == "4096m"
+    assert host(128) == "32768m"
+    assert host(512) == "49152m"
