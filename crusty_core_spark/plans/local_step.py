@@ -1496,8 +1496,8 @@ def _step_local_inner(engine, it: int) -> dict:
     # Jobs are processed independently inside bucket_fn, so ANY partition of
     # the rows by job produces the identical per-job output (row order in
     # the appended log differs, which nothing depends on: every consumer
-    # sorts). Serial: one fold call. Wide iterations: per-bucket folds
-    # across the fork pool — the same bucketing the Spark cogroup uses.
+    # sorts). Serial: one fold call. Wide iterations: per-group folds
+    # across the fork pool — job-disjoint groups, as in the Spark cogroup.
     if (
         n_workers > 1
         and n_chain_rows >= 2000

@@ -10,6 +10,9 @@ parent response was never processed this iteration, and slim root rows
 Ground truth = the same fold run in detail mode on the FULL (un-slimmed)
 rows — the original per-row early-out path — with its sched log aggregated
 to action counts.
+
+One test runs the Spark cogroup stage (``run_chain_stage``) itself: how
+jobs are grouped into cogroup keys must not change any per-job row.
 """
 
 from __future__ import annotations
@@ -249,3 +252,39 @@ def test_slimagg_groups_matches_pandas_reference():
         assert g_n.tolist() == ref["n"].astype("int64").tolist(), trial
         assert g_txt == ref["txt"].tolist(), trial
         assert g_pre == ref["pre_action"].tolist(), trial
+
+
+def test_chain_stage_grouping_does_not_change_rows(spark):
+    """The cogroup key only partitions jobs: the default few groups per
+    shuffle partition and one group per job bucket give the same task,
+    state and lineage rows and the same summed sched counts."""
+    from crusty_core_spark.operators.chain_stage import (
+        N_JOB_BUCKETS,
+        run_chain_stage,
+    )
+    from crusty_core_spark.plans.schemas import CHAIN_IN, JOB_STATE
+
+    cfg = CrawlConfig(sched_log_detail=False, page_budget=3,
+                      robots_txt=False)
+    rows, states = [], []
+    for j in range(40):
+        rows.append(_resp(j, 1, f"http://h{j}.example/p"))
+        rows += [_cand(j, 1, k, f"http://h{j}.example/{k}", seen=k == 2)
+                 for k in range(5)]
+        states.append(_state(j))
+    ci = spark.createDataFrame(
+        [tuple(r[c] for c in _IN_COLS) for r in _slimagg_variant(rows)],
+        schema=CHAIN_IN)
+    state_cols = [c.strip().split(" ")[0] for c in JOB_STATE.split(",")]
+    js = spark.createDataFrame(
+        [tuple(s[c] for c in state_cols) for s in states], schema=JOB_STATE)
+
+    def out(n_groups):
+        pdf = run_chain_stage(ci, js, cfg, n_groups).toPandas()
+        lin = pdf[pdf.row_kind == "lineage"]
+        return (_counts(pdf), _tasks(pdf), _states(pdf),
+                sorted(zip(lin["job_id"], lin["url"])))
+
+    coarse, per_bucket = out(None), out(N_JOB_BUCKETS)
+    assert coarse == per_bucket
+    assert coarse[0]["accept"] == 40 * 3
