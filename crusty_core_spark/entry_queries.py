@@ -59,6 +59,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = cache[key] = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if not getattr(spark, "_crusty_prefetch_started", False):
             spark._crusty_prefetch_started = True
+            import logging
             import os
             import threading
 
@@ -70,8 +71,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                         continue
                     try:
                         cache[k] = spark.read.parquet(p)
-                    except Exception:  # pragma: no cover - best effort
-                        pass
+                    except Exception:  # best effort: _t reads it itself
+                        logging.getLogger(__name__).debug(
+                            "prefetch of %s failed", p, exc_info=True)
 
             threading.Thread(target=_prefetch, daemon=True).start()
     return df

@@ -6,11 +6,16 @@ an Iceberg table — but anti-joining EVERY candidate against it each
 iteration shuffles the full candidate volume. The Bloom shards cut that:
 
 - ``url_seen_shards`` table: one row per shard — (shard_id, bitset binary,
-  n_items), stored PARTITION-PER-SHARD (TableIO.overwrite_partitions), so a
-  commit touches only the shards whose hosts were active this iteration —
-  O(touched shards), never O(all shards).
-- bit positions are computed JVM-side (xxhash64 with k salts — no Python in
-  the hash path); the per-shard set/test runs in numpy inside
+  n_items), stored PARTITION-PER-SHARD (TableIO.overwrite_partitions_local),
+  so a commit touches only the shards whose hosts were active this
+  iteration — O(touched shards), never O(all shards).
+- commit: every iteration's commit computes the new tasks' bit positions
+  with the python xxhash64 twin (functions/xxh64.py, bit-exact with the
+  JVM's) and ORs them into the touched shards on the driver
+  (``merge_pairs_local``).
+- probe: bit positions are computed JVM-side (xxhash64 with k salts — no
+  Python in the hash path); the per-shard bit test runs in numpy, in a
+  broadcast pandas UDF or, past the broadcast bound, inside
   cogroup-applyInPandas, one group per shard.
 - probe semantics: maybe_seen=False is DEFINITELY unseen (Bloom guarantees
   no false negatives) → skips the exact join; maybe_seen=True falls through
@@ -59,10 +64,6 @@ def positions_col(job_id, url, num_hashes: int, n_bits: int) -> F.Column:
             for i in range(num_hashes)
         ]
     )
-
-
-def _empty_bitset(n_bits: int) -> bytes:
-    return bytes(n_bits // 8)
 
 
 def _load_blobs(io: TableIO) -> dict[int, tuple[np.ndarray, int]]:
@@ -206,9 +207,9 @@ def probe(
 def merge_pairs_local(io: TableIO, cfg, pairs) -> None:
     """Driver-side shard merge: OR ``pairs`` of (shard_id, bit positions)
     into their shards' bitsets and commit ONLY the touched partitions with
-    pyarrow (no Spark job). Shared by update()'s small-batch path and the
-    engine's driver-local iteration fast path (which computes the positions
-    with the pure-python xxhash64 twin, functions/xxh64.py)."""
+    pyarrow (no Spark job). Every engine commit lands its Bloom bits here
+    (plans/local_step._bloom_commit computes the positions with the
+    pure-python xxhash64 twin, functions/xxh64.py)."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
@@ -254,93 +255,6 @@ def merge_pairs_local(io: TableIO, cfg, pairs) -> None:
         bits.flags.writeable = False  # cache consumers copy before mutating
         cache[str(sid)] = (parts[str(sid)][-1], bits, n)
     io._bloom_blob_cache = cache
-
-
-def update(
-    accepted: DataFrame,
-    io: TableIO,
-    cfg,
-    host_col: str = "host",
-    touched_ids: list | None = None,
-    n_accepted: int | None = None,
-) -> None:
-    """OR the accepted URLs' bits into their shards.
-
-    Partition-level commit: only the TOUCHED shards are read (pruned via the
-    manifest), merged, and rewritten — untouched shards' files are untouched
-    bytes on disk. O(touched shards) per iteration, not O(table).
-    ``touched_ids`` (the accepted rows' distinct shard ids) can be passed in
-    when the caller already collected them (the engine folds this into its
-    one per-iteration counts collect) — otherwise computed here."""
-    n_bits = cfg.bloom_bits_per_shard
-    upd = accepted.select(
-        shard_id_col(F.col(host_col), cfg.n_bloom_shards).alias("shard_id"),
-        positions_col(F.col("job_id"), F.col("url"),
-                      cfg.bloom_num_hashes, n_bits).alias("_pos"),
-    )
-    if touched_ids is None:
-        touched_ids = [
-            r[0] for r in upd.select("shard_id").distinct().collect()
-        ]
-    if not touched_ids:
-        return
-
-    # low-latency path: when the batch fits the driver and the shards fit
-    # memory (same bound as the broadcast probe), merge the bits driver-side
-    # in numpy (ONE Arrow-batched toPandas, no cogroup shuffle) and keep the
-    # blob cache warm for the next probe — measured cheaper than the cogroup
-    # job's fixed floor (shard read + shuffle + python workers + 64-file
-    # write) well past 10^5 rows. The threshold is sized by payload: 10^6
-    # rows x (shard_id + k positions) ~= 45 MB through one Arrow collect,
-    # and the numpy OR is O(rows) driver work — still far below the cogroup
-    # job's 4-8s floor (profiled at both 1 and 4 executors; the cogroup is
-    # also executor-count-invariant, so it drags the N->4N ratio). Bigger
-    # iterations take the cogroup path below — O(touched shards) either way.
-    total_bytes = cfg.n_bloom_shards * (n_bits // 8)
-    if (
-        n_accepted is not None
-        and n_accepted <= 1_000_000
-        and total_bytes <= 64 * 1024 * 1024
-    ):
-        pdf = upd.toPandas()
-        merge_pairs_local(
-            io, cfg,
-            list(zip(pdf["shard_id"].tolist(), pdf["_pos"].tolist())),
-        )
-        return
-
-    if io.exists(SHARDS_TABLE):
-        shards = io.read_partitions(SHARDS_TABLE, touched_ids)
-    else:
-        shards = io.spark.createDataFrame([], SHARD_SCHEMA)
-
-    def fn(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        sid = int(key[0])
-        if len(right):
-            bits = np.frombuffer(
-                bytes(right.iloc[0]["bitset"]), dtype=np.uint8
-            ).copy()
-            n = int(right.iloc[0]["n_items"])
-        else:
-            bits = np.zeros(n_bits // 8, dtype=np.uint8)
-            n = 0
-        if len(left):
-            # one flattened position vector per shard group (vectorized OR)
-            p = np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in left["_pos"]]
-            )
-            np.bitwise_or.at(bits, p >> 3, (1 << (p & 7)).astype(np.uint8))
-        return pd.DataFrame(
-            [{"shard_id": sid, "bitset": bits.tobytes(), "n_items": n + len(left)}]
-        )
-
-    touched = (
-        upd.groupBy("shard_id")
-        .cogroup(shards.groupBy("shard_id"))
-        .applyInPandas(fn, schema=SHARD_SCHEMA)
-    )
-    io.overwrite_partitions(SHARDS_TABLE, touched, "shard_id")
-    io._bloom_blob_cache = {}  # spark-side merge → invalidate the driver cache
 
 
 def dedup_flag(

@@ -37,10 +37,10 @@ Scale notes (the 100 TB design intent — verified locally at small SF):
   head/tail iterations are job-launch-overhead-bound on any cluster size,
   so a scale-out engine needs a local mode for them just like AQE collapses
   tiny shuffles to LocalTableScan. Parity across paths is pinned by
-  tests/test_fastpath.py. Every iteration commits on the driver: a
-  distributed one collects its cached chain output and fetch_log once and
-  commits through the local path's ``commit_iteration``, and a distributed
-  seed through its ``commit_seed``.
+  tests/test_fastpath.py. Every iteration commits on the driver through
+  one function, the local path's ``commit_iteration``: a distributed
+  iteration collects its cached chain output and fetch_log once and hands
+  them over, and both seed paths commit there as iteration 0.
 """
 
 from __future__ import annotations
@@ -420,6 +420,7 @@ class CrawlEngine:
         chain-only (no fetch/extract — roots cost ~30 µs/row vs ~0.6 ms
         for a crawled page), so the cutover sits well above the iteration
         threshold; 8× is conservative against the kernel-cost ratio."""
+        t0 = time.time()
         spark = self.spark
         if not isinstance(seeds, DataFrame):
             seeds = list(seeds)
@@ -475,78 +476,17 @@ class CrawlEngine:
         )
         chain_out = run_chain_stage(chain_input, job_state, self.cfg,
                                     custom_filters=self.custom_task_filters)
-        from crusty_core_spark.plans.local_step import commit_seed
+        from crusty_core_spark.plans.local_step import commit_iteration
 
-        # one collect; the commit (tables, state, checkpoint) runs on the
-        # driver like the local seed's. Exact ints: no float64 round trip
-        # for null-bearing columns
+        # one collect; the seed commits as iteration 0 on the driver, like
+        # every iteration. Exact ints: no float64 round trip for
+        # null-bearing columns
         pdf = chain_out.toArrow().to_pandas(integer_object_nulls=True)
         with self.io.deferred_manifest():
-            commit_seed(self, pdf, exec_local=0)
-
-    def _sched_agg(self, chain_out, fam="sched"):
-        """Per-action scheduling counts — from detail rows or from the
-        counts-only rows, depending on cfg.sched_log_detail."""
-        if self.cfg.sched_log_detail:
-            return (
-                chain_out.filter(F.col("row_kind") == "sched")
-                .groupBy(F.lit(fam).alias("fam"), "action")
-                .agg(F.count("*").alias("n"))
+            commit_iteration(
+                self, 0, pdf, None, {}, exec_local=0, t0=t0,
+                extra_state={"seeded": True, "cfg": self.cfg.to_dict()},
             )
-        return (
-            chain_out.filter(F.col("row_kind") == "sched_count")
-            .groupBy(F.lit(fam).alias("fam"), "action")
-            .agg(F.sum("parent_seq_num").cast("long").alias("n"))
-        )
-
-    def _chain_obs_metrics(self) -> list:
-        """Observation aggregates for the chain output (step's obs_chain).
-
-        Sched action counts over the closed accept/skip/term/rejected
-        domain (chain_decide verdicts + the scheme rejection; custom
-        task-filter verdicts map into it, operators/chain.py:257-273), and
-        the new tasks' touched bloom-shard / job-bucket id sets encoded as
-        bit_or bitmask words — (domain+63)//64 longs each — because
-        Observation aggregates cannot express a distinct."""
-        from crusty_core_spark.operators import bloom
-
-        cfg = self.cfg
-        if cfg.sched_log_detail:
-            base = F.col("row_kind") == "sched"
-
-            def cnt(a):
-                return (
-                    F.sum(F.when(base & (F.col("action") == a), 1)
-                          .otherwise(0)).cast("long").alias(a)
-                )
-        else:
-            base = F.col("row_kind") == "sched_count"
-
-            def cnt(a):
-                return (
-                    F.sum(F.when(base & (F.col("action") == a),
-                                 F.col("parent_seq_num")).otherwise(0))
-                    .cast("long").alias(a)
-                )
-
-        m = [cnt(a) for a in ("accept", "skip", "term", "rejected")]
-        is_task = F.col("row_kind") == "task"
-        shard = bloom.shard_id_col(F.col("host"), cfg.n_bloom_shards)
-        bucket = F.pmod(F.col("job_id"), F.lit(N_JOB_BUCKETS)).cast("int")
-        for prefix, col, dom in (("s", shard, cfg.n_bloom_shards),
-                                 ("b", bucket, N_JOB_BUCKETS)):
-            word = (col / F.lit(64)).cast("int")
-            bit = F.call_function(
-                "shiftleft", F.lit(1).cast("long"), (col % 64).cast("int")
-            )
-            for w in range((dom + 63) // 64):
-                m.append(
-                    F.bit_or(
-                        F.when(is_task & (word == w), bit)
-                        .otherwise(F.lit(0).cast("long"))
-                    ).cast("long").alias(f"{prefix}{w}")
-                )
-        return m
 
     # ------------------------------------------------------------------ step
 
@@ -881,16 +821,15 @@ class CrawlEngine:
         # --- dedup check flag (task_filters.rs:184-192; commit stays in the
         #     chain): Bloom-shard prefilter + shard-pruned exact backstop,
         #     or plain join
-        self._dedup_stats = {}
+        dedup_stats = {}
         if n_cands == 0:
             cands = None
-            self._dedup_stats = {"dedup_shards_read": 0,
-                                 "dedup_read_bytes": 0}
+            dedup_stats = {"dedup_shards_read": 0, "dedup_read_bytes": 0}
         elif cfg.use_bloom:
             from crusty_core_spark.operators import bloom
 
             cands = bloom.dedup_flag(cands_raw, self.io, cfg,
-                                     stats=self._dedup_stats)
+                                     stats=dedup_stats)
         else:
             seen = self.url_seen_df().select(
                 "job_id", "url", F.lit(True).alias("seen_global")
@@ -927,14 +866,10 @@ class CrawlEngine:
         # predicate the per-row path applied (operators/chain_stage.py,
         # pinned by tests/test_chain_fold.py). Detail mode keeps full
         # rows — its sched log records the urls.
-        # SPARK_CRAWL_NO_SLIM: measurement kill-switch for A/B-ing the
-        # slimming against the identical build (bench methodology).
         slim_cands = None
         if cands is None:
             pass
-        elif not cfg.sched_log_detail and not os.environ.get(
-            "SPARK_CRAWL_NO_SLIM"
-        ):
+        elif not cfg.sched_log_detail:
             scheme_ok = F.col("url").startswith("http:") | F.col(
                 "url"
             ).startswith("https:")
@@ -1064,18 +999,6 @@ class CrawlEngine:
         chain_out = run_chain_stage(chain_input, job_state, self.cfg,
                                     custom_filters=self.custom_task_filters,
                                     drain=drain)
-        # chain-side counts ride the chain materialization the same way the
-        # fetch-side ones ride the fetch cache (see obs_fetch above): sched
-        # action counts over a CLOSED domain (accept/skip/term/rejected —
-        # chain_decide + the scheme rejection; custom task-filter verdicts
-        # map into it, operators/chain.py) and the new tasks' touched
-        # bloom-shard / job-bucket id SETS as bit_or bitmask words
-        # ((domain+63)//64 longs each) — the one distinct the old counts
-        # job needed. Replaces a 3-scan union collect per iteration.
-        obs_chain = Observation()
-        chain_out = chain_out.observe(
-            obs_chain, *self._chain_obs_metrics()
-        )
         chain_out.persist()
         barrier(chain_out, "chain")
 
@@ -1149,15 +1072,15 @@ class CrawlEngine:
         # blocked slots at 4 executors vs 27 at 1). chain_out is the DAG
         # sink — one count() runs fetch→extract→dedup→chain fully parallel
         # with zero lock contention, and every downstream job reads warm
-        # cache. Every per-iteration driver fact (fetch/sched counts, byte
-        # taps, touched shard/bucket sets) was observed DURING this wave by
-        # obs_fetch/obs_chain — no counts job exists anymore; resolve just
-        # reads the accumulators.
+        # cache. The fetch counts and byte taps were observed DURING this
+        # wave by obs_fetch — no counts job exists; resolve just reads the
+        # accumulators. The sched counts and the touched shard/bucket sets
+        # are recomputed by commit_iteration from the collected chain output.
         chain_out.count()
 
         def resolve_counts():
             fm = obs_fetch.get  # blocks until the observed plan's first
-            cm = obs_chain.get  # action lands — both already did, above
+            # action lands — it already did, above
             n = int(fm["n"] or 0)
             p = int(fm["processed"] or 0)
             e = int(fm["errors"] or 0)
@@ -1173,28 +1096,10 @@ class CrawlEngine:
                 counts["error:all"] = e
             if n - p - e - d:
                 counts["other"] = n - p - e - d
-            sched = {
-                a: int(cm[a] or 0)
-                for a in ("accept", "skip", "term", "rejected")
-                if cm[a]
-            }
-
-            def bits(prefix, dom):
-                out = []
-                for w in range((dom + 63) // 64):
-                    word = int(cm[f"{prefix}{w}"] or 0)
-                    out.extend(
-                        w * 64 + i for i in range(64) if word >> i & 1
-                    )
-                return out
-
             return {
                 "counts": counts,
-                "sched": sched,
                 "bytes": {"read": int(fm["rb"] or 0),
                           "write": int(fm["wb"] or 0)},
-                "shards": bits("s", cfg.n_bloom_shards),
-                "buckets": bits("b", N_JOB_BUCKETS),
             }
 
         mark("materialize")
@@ -1246,8 +1151,9 @@ class CrawlEngine:
                 remaining=(remaining.toPandas() if remaining is not None
                            else None),
                 drain=drain, read_bytes=resolved["bytes"]["read"],
-                write_bytes=resolved["bytes"]["write"], exec_local=0,
-                t0=t0, deferred_jobs=deferred_jobs, extra_state=state_kw,
+                write_bytes=resolved["bytes"]["write"],
+                dedup_stats=dedup_stats, exec_local=0, t0=t0,
+                deferred_jobs=deferred_jobs, extra_state=state_kw,
             )
         for df in caches:
             df.unpersist()

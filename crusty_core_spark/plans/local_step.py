@@ -341,11 +341,21 @@ def _url_host(u: str | None) -> str | None:
         return ""
 
 
+def _shard_map_worker(args):
+    """Fork-pool kernel: host -> bloom shard id for a slice of hosts."""
+    hosts, n_shards = args
+    return {h: bloom_shard_id(h or "", n_shards) for h in hosts}
+
+
 def _host_shards(engine, cfg, hosts) -> dict:
     """host → bloom shard id through a crawl-lifetime cache on the engine:
     the same domains recur every iteration, and the pure-python xxhash64
     twin costs ~10 µs per call (38k calls/crawl profiled before caching —
-    vs ~1 distinct host per domain per crawl)."""
+    vs ~1 distinct host per domain per crawl). A seed brings up to 8x the
+    iteration threshold of new hosts at once, so 2,000 or more uncached
+    hosts are hashed across the fork pool (1.4 s of a 100k-host seed
+    serial). Call it on the iteration's thread, never from a commit
+    writer: it may fork."""
     cache = getattr(engine, "_host_shard_cache", None)
     if (
         cache is None
@@ -354,13 +364,22 @@ def _host_shards(engine, cfg, hosts) -> dict:
         cache = engine._host_shard_cache = {}
         engine._host_shard_n = cfg.n_bloom_shards
     n = cfg.n_bloom_shards
-    out = {}
-    for h in hosts:
-        s = cache.get(h)
-        if s is None:
-            s = cache[h] = bloom_shard_id(h or "", n)
-        out[h] = s
-    return out
+    missing = [h for h in hosts if h not in cache]
+    n_workers = cfg.resolved_local_workers()
+    if n_workers > 1 and len(missing) >= 2000:
+        import numpy as np
+
+        chunks = [
+            ([missing[i] for i in ix], n)
+            for ix in np.array_split(np.arange(len(missing)), n_workers)
+            if len(ix)
+        ]
+        for part in _get_pool(n_workers).map(_shard_map_worker, chunks):
+            cache.update(part)
+    else:
+        for h in missing:
+            cache[h] = bloom_shard_id(h or "", n)
+    return {h: cache[h] for h in hosts}
 
 
 def _slimagg_groups(jj, tt, pp, ll):
@@ -408,69 +427,6 @@ def _slimagg_groups(jj, tt, pp, ll):
         [txts[i] for i in app],
         [uniq_l[c] for c in sp_starts[app].tolist()],
     )
-
-
-def _classify(row, cfg, custom_status, custom_load):
-    """Mirror of the engine's status/load bulk masks + custom filter pass
-    (plans/engine.py step + _apply_custom_fetch_filters). Returns
-    (action, canon_location)."""
-    status = row["status"]
-    canon_loc = None
-    if row["resolve_failed"]:
-        action = "error:ResolveError"
-    elif row["target"] == "JustResolveDNS":
-        action = "resolved"
-    elif status is None:
-        action = "error:HttpError"
-    else:
-        status = int(status)
-        is_redirect = 300 <= status <= 399
-        ct = row["content_type"]
-        ct_ok = ct is not None and any(
-            a in ct for a in cfg.accepted_content_types
-        )
-        if is_redirect:
-            canon_loc = canonicalize_url(row["location"], base=row["url"])
-        if is_redirect and int(row["redirect"]) >= cfg.max_redirect:
-            action = "term:MaxRedirect"
-        elif is_redirect and canon_loc is None:
-            action = "error:BadLocation"
-        elif is_redirect:
-            action = "term:Redirect"
-        elif not ct_ok:
-            action = "term:ContentType"
-        elif row["target"] == "Head":
-            action = "head"
-        elif row["html"] is not None and len(row["html"]) > cfg.max_response_size:
-            action = "error:HttpTooBigResponse"
-        else:
-            action = "processed"
-    if custom_status and action in ("processed", "head",
-                                    "error:HttpTooBigResponse"):
-        for f in custom_status:
-            try:
-                v = f(row["status"], row["content_type"], row["url"],
-                      row["depth"])
-            except Exception:
-                continue
-            if isinstance(v, str) and v != "accept":
-                action = v
-                break
-    if custom_load and action == "processed" and int(row["marker"]) != 1:
-        body = decode_body(
-            bytes(row["html"]) if row["html"] is not None else b"",
-            row["content_encoding"],
-        )
-        for f in custom_load:
-            try:
-                v = f(row["status"], row["content_type"], body, row["url"],
-                      row["depth"])
-            except Exception:
-                continue
-            if isinstance(v, str) and v != "accept":
-                action = v
-                break
-    return action, canon_loc
 
 
 def _hosts_usable_map(engine) -> dict[str, bool]:
@@ -593,26 +549,22 @@ def seed_local(engine, seed_pairs: list[tuple[int, str]]) -> None:
 
     Semantics are identical by construction: the SAME kernels run —
     ``canonicalize_url`` (the function inside canonicalize_udf),
-    ``_url_host``/scheme twins, and ``make_chain_fn`` — and the commits go
-    through the same TableIO manifest (same schemas, same partition
+    ``_url_host``/scheme twins, and ``make_chain_fn`` — and the commit is
+    ``commit_iteration``'s, as iteration 0 (same tables, same partition
     layout, same checkpoint label), so distributed iterations, resume,
     and readers interleave freely. Parity distributed-vs-local seed is
     pinned by tests/test_fastpath.py."""
-    import re
-
     import gc
 
-    cfg = engine.cfg
-    io = engine.io
+    t0 = time.time()
     gc_was_enabled = gc.isenabled()
     gc.disable()
     try:
-        with io.deferred_manifest():
-            _seed_local_inner(engine, seed_pairs, cfg, io, re)
+        with engine.io.deferred_manifest():
+            _seed_local_inner(engine, seed_pairs, t0)
     finally:
         if gc_was_enabled:
             gc.enable()
-
 
 
 #: parsed-DDL cache: StructType.fromDDL is a py4j round trip (~0.2 s per
@@ -652,26 +604,19 @@ def _canon_seed_worker(pairs):
     return out
 
 
-def _shard_map_worker(args):
-    """Fork-pool kernel: host -> bloom shard id for a slice of hosts."""
-    hosts, n_shards = args
-    return {h: bloom_shard_id(h or "", n_shards) for h in hosts}
-
-
-def _seed_local_inner(engine, seed_pairs, cfg, io, re):
-    from crusty_core_spark.plans import schemas as S
-
-    n_workers_seed = cfg.resolved_local_workers()
+def _seed_local_inner(engine, seed_pairs, t0: float):
+    cfg = engine.cfg
+    n_workers = cfg.resolved_local_workers()
     # --- canonicalize + host/scheme (python twins of the Column exprs),
     #     pooled above the same 2k threshold as the chain fold
-    if n_workers_seed > 1 and len(seed_pairs) >= 2000:
+    if n_workers > 1 and len(seed_pairs) >= 2000:
         import numpy as np
 
         splits = [
             s for s in np.array_split(np.arange(len(seed_pairs)),
-                                      n_workers_seed) if len(s)
+                                      n_workers) if len(s)
         ]
-        parts = _get_pool(n_workers_seed).map(
+        parts = _get_pool(n_workers).map(
             _canon_seed_worker,
             [[seed_pairs[i] for i in ix] for ix in splits],
         )
@@ -720,7 +665,6 @@ def _seed_local_inner(engine, seed_pairs, cfg, io, re):
     )
 
     # --- the exact chain fold (same pool split as step_local)
-    n_workers = cfg.resolved_local_workers()
     if (
         n_workers > 1
         and len(chain_in) >= 2000
@@ -744,189 +688,8 @@ def _seed_local_inner(engine, seed_pairs, cfg, io, re):
         chain_out = fn((0,), chain_in, states)
     if not len(chain_out):
         chain_out = pd.DataFrame(columns=S.CHAIN_OUT_COLS)
-    commit_seed(engine, chain_out, exec_local=1)
-
-
-def commit_seed(engine, chain_out, exec_local: int) -> None:
-    """Commit iteration 0 from the driver-resident chain output of the
-    root candidates: the table writes, the metrics row, state and the
-    checkpoint. Both seed paths end here: the driver-local seed, and the
-    distributed seed, which collects its chain stage's output once."""
-    from pyspark.sql import types as T
-
-    from crusty_core_spark.plans import schemas as S
-
-    cfg = engine.cfg
-    io = engine.io
-    n_workers_seed = cfg.resolved_local_workers()
-    # --- sched counters (mirror of _sched_agg)
-    if cfg.sched_log_detail:
-        sched_counts = (
-            chain_out[chain_out["row_kind"] == "sched"]
-            .groupby("action").size().to_dict()
-        )
-    else:
-        sc = chain_out[chain_out["row_kind"] == "sched_count"]
-        sched_counts = (
-            sc.groupby("action")["parent_seq_num"].sum().astype(int).to_dict()
-        )
-    engine._sched_counts = {k: int(v) for k, v in sched_counts.items()}
-
-    def _schema(name, ddl):
-        if io.exists(name) or io.snapshot_id(name) > 0:
-            return io.schema(name)
-        return _ddl(ddl)
-
-    # --- commits (the same tables and layout as an iteration's commit)
-    new_tasks = chain_out[chain_out["row_kind"] == "task"]
-    log_rows = chain_out[chain_out["row_kind"] != "state"].assign(iter=0)
-    # an existing chain table's schema already carries 'iter' (appended at
-    # first write) — only the fresh-table DDL needs it added, else pyarrow
-    # raises Duplicate column names on re-seed into a crashed workdir
-    chain_schema = (
-        io.schema("chain")
-        if io.exists("chain") or io.snapshot_id("chain") > 0
-        else T.StructType(
-            list(_ddl(S.CHAIN_OUT)) + [T.StructField("iter", T.LongType())]
-        )
-    )
-    hosts_list = new_tasks["host"].tolist()
-    uniq_hosts = list(set(hosts_list))
-    # host -> shard pooled above the chain-fold threshold (pure-python
-    # xxhash64 twin, ~14 µs/host serial — 1.4 s of a 100k-host seed)
-    shard_pool = (_get_pool(n_workers_seed)
-                  if n_workers_seed > 1 and len(uniq_hosts) >= 2000 else None)
-    # independent tables commit concurrently (same pattern as step_local's
-    # commit block); all futures join before the seed checkpoint. Both
-    # fork-pool uses are resolved before the first writer starts: a fork
-    # while commit threads run would copy their held locks.
-    bloom_pool = _bloom_pool(cfg, len(new_tasks))
-    commit_futs = []
-    _submit = _commit_pool().submit
-    commit_futs.append(_submit(
-        io.append_pdf, "chain", log_rows, chain_schema,
-        n_files=min(16, len(log_rows) // 25_000 + 1),
-    ))
-
-    states_out = chain_out.loc[
-        chain_out["row_kind"] == "state", _STATE_COLS
-    ]
-    states_out = states_out.assign(
-        _bucket=states_out["job_id"].astype("int64") % N_JOB_BUCKETS
-    )
-    # fresh-table schemas carry the partition column exactly like the
-    # distributed writers' frames (withColumn appends it last)
-    js_schema = (
-        io.schema("job_state")
-        if io.exists("job_state") or io.snapshot_id("job_state") > 0
-        else T.StructType(
-            list(_ddl(S.JOB_STATE))
-            + [T.StructField("_bucket", T.IntegerType())]
-        )
-    )
-    commit_futs.append(_submit(
-        io.overwrite_partitions_pdf,
-        "job_state", states_out, "_bucket", js_schema,
-    ))
-
-    if shard_pool is not None:
-        import numpy as np
-
-        chunks = [
-            ([uniq_hosts[i] for i in ix], cfg.n_bloom_shards)
-            for ix in np.array_split(np.arange(len(uniq_hosts)),
-                                     n_workers_seed) if len(ix)
-        ]
-        shard_by_host = {}
-        for part in shard_pool.map(_shard_map_worker, chunks):
-            shard_by_host.update(part)
-    else:
-        shard_by_host = {
-            h: bloom_shard_id(h or "", cfg.n_bloom_shards)
-            for h in uniq_hosts
-        }
-    seen_new = new_tasks[["job_id", "url"]].assign(
-        added_iter=0, shard=[shard_by_host[h] for h in hosts_list]
-    )
-    us_schema = (
-        io.schema("url_seen")
-        if io.exists("url_seen") or io.snapshot_id("url_seen") > 0
-        else T.StructType(
-            list(_ddl(S.URL_SEEN)) + [T.StructField("shard", T.IntegerType())]
-        )
-    )
-    commit_futs.append(_submit(
-        io.append_partitions_pdf, "url_seen", seen_new, "shard", us_schema,
-    ))
-
-    if cfg.use_bloom and len(new_tasks):
-        commit_futs.append(_submit(
-            _bloom_commit, io, cfg, bloom_pool,
-            new_tasks["job_id"].tolist(), new_tasks["url"].tolist(),
-            hosts_list, shard_by_host,
-        ))
-
-    if cfg.delay_ms > 0:
-        tasks_pdf = new_tasks[_TASK_SLICE].assign(
-            next_fetch_iter=1, added_iter=0
-        )
-        commit_futs.append(_submit(
-            io.overwrite_pdf,
-            "frontier_pending", tasks_pdf[_FRONTIER_COLS],
-            _schema("frontier_pending", S.FRONTIER),
-            n_files=min(16, len(tasks_pdf) // 25_000 + 1),
-        ))
-        next_job_ids = set(tasks_pdf["job_id"].tolist())
-    else:
-        next_job_ids = set(new_tasks["job_id"].tolist())
-
-    state_rows = chain_out[chain_out["row_kind"] == "state"]
-    touched = state_rows[
-        state_rows["action"].isin(["touched", "touched_done"])
-    ]
-    finished = touched[~touched["job_id"].isin(next_job_ids)]
-    job_log_pdf = pd.DataFrame(
-        {
-            "job_id": finished["job_id"].astype("int64"),
-            "iter": 0,
-            "reason": "RootRejected",
-            "budget_used": finished["budget_used"].astype("int64"),
-            "resp_counter": finished["resp_counter"].astype("int64"),
-            "seq_counter": finished["seq_counter"].astype("int64"),
-        }
-    )
-    commit_futs.append(_submit(
-        io.append_pdf, "job_log", job_log_pdf, _schema("job_log", S.JOB_LOG)
-    ))
-    for f in commit_futs:  # join before the seed checkpoint
-        f.result()
-
-    # --- metrics row + state + checkpoint
-    row = [
-        0, 0, 0, 0,
-        sum(engine._sched_counts.values()),
-        engine._sched_counts.get("accept", 0),
-        engine._sched_counts.get("skip", 0),
-        engine._sched_counts.get("term", 0),
-        0, 0, 0, 0, 0,
-        int(exec_local),
-    ]
-    buf = list(io.state.get("metrics_buffer", []))
-    buf.append(row)
-    io.state["metrics_buffer"] = buf
-
-    seeded_buckets = sorted(
-        {int(j) % N_JOB_BUCKETS for j in new_tasks["job_id"].tolist()}
-    )
-    engine._maybe_compact()
-    io.set_state(
-        iter=0,
-        seeded=True,
-        cfg=cfg.to_dict(),
-        pending=engine._sched_counts.get("accept", 0),
-        pending_buckets=seeded_buckets,
-    )
-    io.checkpoint("iter-000000")
+    commit_iteration(engine, 0, chain_out, None, {}, exec_local=1, t0=t0,
+                     extra_state={"seeded": True, "cfg": cfg.to_dict()})
 
 
 def step_local(engine, it: int) -> dict:
@@ -1142,8 +905,8 @@ def _step_local_inner(engine, it: int) -> dict:
     action[rf_a] = "error:ResolveError"
 
     # custom status/load filters: per-row over the affected subset only
-    # (same sequence as _classify — status filters first, then load
-    # filters against the post-status action)
+    # (same sequence as engine._apply_custom_fetch_filters — status
+    # filters first, then load filters against the post-status action)
     if engine.custom_status_filters:
         for i in np.flatnonzero(
             np.isin(action, ("processed", "head", "error:HttpTooBigResponse"))
@@ -1347,7 +1110,6 @@ def _step_local_inner(engine, it: int) -> dict:
                 ((j, u) in seen_set for j, u in zip(c_job, c_url)),
                 dtype=bool, count=n_cands,
             )
-    engine._dedup_stats = dedup_stats
     mark("dedup")
 
     # --- chain input (resp rows ∪ cand rows), columnar. Known-skip
@@ -1380,9 +1142,7 @@ def _step_local_inner(engine, it: int) -> dict:
         cr = np.asarray(c_red, dtype="int64")
         cm = np.asarray(c_marker, dtype="int64")
         pre = np.full(n_cands, None, dtype=object)
-        if not cfg.sched_log_detail and not os.environ.get(
-            "SPARK_CRAWL_NO_SLIM"
-        ):
+        if not cfg.sched_log_detail:
             # exact twin of engine.step's pre_action CASE (rejected takes
             # precedence; rel is already ""-coalesced here). Arrow prefix
             # test over the whole batch (null url → not ok, like the old
@@ -1639,7 +1399,8 @@ def _step_local_inner(engine, it: int) -> dict:
     commit_iteration(
         engine, it, chain_out, fetch_log_pdf, counts,
         remaining=remaining, drain=drain, read_bytes=int(rd_a.sum()),
-        write_bytes=int(wr_a.sum()), exec_local=1, t0=t0,
+        write_bytes=int(wr_a.sum()), dedup_stats=dedup_stats, exec_local=1,
+        t0=t0,
     )
     if prof:
         mark("commit")
@@ -1653,25 +1414,58 @@ def _step_local_inner(engine, it: int) -> dict:
     return counts
 
 
+#: fresh-table DDL of every table an iteration commits: the frame's
+#: columns, with the partition or log column last where the table's
+#: first writer appended one
+_FRESH_DDL = {
+    "chain": S.CHAIN_OUT + ", iter long",
+    "job_state": S.JOB_STATE + ", _bucket int",
+    "url_seen": S.URL_SEEN + ", shard int",
+    "frontier_pending": S.FRONTIER,
+    "job_log": S.JOB_LOG,
+    "fetch_log": S.FETCH_LOG,
+}
+
+
+def _schema(engine, name: str):
+    """The committed schema of ``name``, or its fresh-table schema when
+    no commit has landed yet (the seed; fetch_log at iteration 1). An
+    existing table keeps the columns it was created with: re-seeding a
+    crashed workdir must not add ``iter`` to a chain table again."""
+    io = engine.io
+    if io.exists(name) or io.snapshot_id(name) > 0:
+        return io.schema(name)
+    schema = _ddl(_FRESH_DDL[name])
+    if (name == "fetch_log" and engine.user_extract_schema
+            and engine.cfg.fetch_log_detail):
+        from pyspark.sql import types as T
+
+        # a new StructType: .add() would mutate the cached instance
+        schema = T.StructType(
+            list(schema.fields) + list(_ddl(engine.user_extract_schema))
+        )
+    return schema
+
+
 def commit_iteration(engine, it: int, chain_out, fetch_log, counts: dict,
                      *, remaining=None, drain: bool = False,
                      read_bytes: int = 0, write_bytes: int = 0,
+                     dedup_stats: dict | None = None,
                      exec_local: int = 1, t0: float,
                      deferred_jobs=(), extra_state: dict | None = None):
     """Commit one crawl iteration from driver-resident results: the table
     writes, the metrics row, maintenance, state and the checkpoint.
 
-    Both paths end here: every driver-local iteration, and every
-    distributed iteration, which collects its cached chain output and
-    fetch_log once and hands them over. ``chain_out``: the fold's output
+    Every commit ends here: driver-local iterations, distributed ones
+    (which collect their cached chain output and fetch_log once), and
+    both seed paths, as iteration 0. ``chain_out``: the fold's output
     frame (CHAIN_OUT rows); ``fetch_log``: a pandas frame or Arrow table
-    of fetch_log rows; ``counts``: fetch action counts; ``remaining``:
-    politeness mode's not-yet-ready rows (frontier columns);
+    of fetch_log rows, None for the seed; ``counts``: fetch action
+    counts; ``remaining``: politeness mode's not-yet-ready rows (frontier
+    columns); ``dedup_stats``: the dedup stage's scan counters;
     ``deferred_jobs``: jobs with a straggler carried to the next iteration
     (never Finished); ``extra_state``: more manifest state to set with the
     iteration's."""
-    from pyspark.sql import types as T
-
     cfg = engine.cfg
     io = engine.io
     if cfg.sched_log_detail:
@@ -1682,7 +1476,7 @@ def commit_iteration(engine, it: int, chain_out, fetch_log, counts: dict,
         sched_counts = (
             sc.groupby("action")["parent_seq_num"].sum().astype(int).to_dict()
         )
-    engine._sched_counts = {k: int(v) for k, v in sched_counts.items()}
+    sched_counts = {k: int(v) for k, v in sched_counts.items()}
 
     new_tasks = chain_out[chain_out["row_kind"] == "task"]
     # shard ids are per-HOST — hosts repeat heavily across tasks AND
@@ -1699,8 +1493,9 @@ def commit_iteration(engine, it: int, chain_out, fetch_log, counts: dict,
     # tables commit CONCURRENTLY: each write is submitted as soon as its
     # input frame exists, all are joined before set_state/checkpoint —
     # the durability point — so the crash/recovery model is unchanged.
-    # The Bloom fork pool is resolved before the first writer starts: a
-    # fork while commit threads run would copy their held locks.
+    # Both fork-pool uses (_host_shards above, the Bloom pool here) are
+    # resolved before the first writer starts: a fork while commit
+    # threads run would copy their held locks.
     bloom_pool = _bloom_pool(cfg, len(new_tasks))
     commit_futs = []
     _submit = _commit_pool().submit
@@ -1713,7 +1508,7 @@ def commit_iteration(engine, it: int, chain_out, fetch_log, counts: dict,
     # iteration may be distributed — its frontier scan then starts from
     # parallel input partitions instead of one single-file task
     commit_futs.append(_submit(
-        io.append_pdf, "chain", log_rows, io.schema("chain"),
+        io.append_pdf, "chain", log_rows, _schema(engine, "chain"),
         n_files=min(16, len(log_rows) // 25_000 + 1),
     ))
 
@@ -1725,7 +1520,7 @@ def commit_iteration(engine, it: int, chain_out, fetch_log, counts: dict,
     )
     commit_futs.append(_submit(
         io.overwrite_partitions_pdf,
-        "job_state", states_out, "_bucket", io.schema("job_state"),
+        "job_state", states_out, "_bucket", _schema(engine, "job_state"),
     ))
 
     seen_new = new_tasks[["job_id", "url"]].assign(
@@ -1734,7 +1529,7 @@ def commit_iteration(engine, it: int, chain_out, fetch_log, counts: dict,
     )
     commit_futs.append(_submit(
         io.append_partitions_pdf,
-        "url_seen", seen_new, "shard", io.schema("url_seen"),
+        "url_seen", seen_new, "shard", _schema(engine, "url_seen"),
     ))
 
     if cfg.use_bloom and len(new_tasks):
@@ -1756,7 +1551,7 @@ def commit_iteration(engine, it: int, chain_out, fetch_log, counts: dict,
         commit_futs.append(_submit(
             io.overwrite_pdf,
             "frontier_pending", tasks_pdf[_FRONTIER_COLS],
-            io.schema("frontier_pending"),
+            _schema(engine, "frontier_pending"),
             n_files=min(16, len(tasks_pdf) // 25_000 + 1),
         ))
         next_job_ids = set(tasks_pdf["job_id"].tolist())
@@ -1773,42 +1568,38 @@ def commit_iteration(engine, it: int, chain_out, fetch_log, counts: dict,
         {
             "job_id": finished["job_id"].astype("int64"),
             "iter": int(it),
-            "reason": "SoftTimeout" if drain else "Complete",
+            # a job the seed leaves with no task lost its root to the chain
+            "reason": ("RootRejected" if it == 0
+                       else "SoftTimeout" if drain else "Complete"),
             "budget_used": finished["budget_used"].astype("int64"),
             "resp_counter": finished["resp_counter"].astype("int64"),
             "seq_counter": finished["seq_counter"].astype("int64"),
         }
     )
     commit_futs.append(_submit(
-        io.append_pdf, "job_log", job_log_pdf, io.schema("job_log")
+        io.append_pdf, "job_log", job_log_pdf, _schema(engine, "job_log")
     ))
 
-    if io.exists("fetch_log") or io.snapshot_id("fetch_log") > 0:
-        fl_schema = io.schema("fetch_log")
-    else:
-        # copy the cached fields — .add() would mutate the cached instance
-        fl_fields = list(_ddl(S.FETCH_LOG).fields)
-        if engine.user_extract_schema and cfg.fetch_log_detail:
-            fl_fields += list(_ddl(engine.user_extract_schema).fields)
-        fl_schema = T.StructType(fl_fields)
-    commit_futs.append(_submit(
-        io.append_pdf, "fetch_log", fetch_log, fl_schema
-    ))
+    if fetch_log is not None:
+        commit_futs.append(_submit(
+            io.append_pdf, "fetch_log", fetch_log,
+            _schema(engine, "fetch_log"),
+        ))
     for f in commit_futs:  # join before the checkpoint (durability point)
         f.result()
 
     # --- metrics buffer + state + checkpoint (identical on both paths)
-    dedup_stats = getattr(engine, "_dedup_stats", None) or {}
+    dedup_stats = dedup_stats or {}
     n_ready = sum(counts.values())
     row = [
         it,
         n_ready,
         counts.get("processed", 0),
         sum(v for k, v in counts.items() if k.startswith("error")),
-        sum(engine._sched_counts.values()),
-        engine._sched_counts.get("accept", 0),
-        engine._sched_counts.get("skip", 0),
-        engine._sched_counts.get("term", 0),
+        sum(sched_counts.values()),
+        sched_counts.get("accept", 0),
+        sched_counts.get("skip", 0),
+        sched_counts.get("term", 0),
         int(read_bytes),
         int(write_bytes),
         int((time.time() - t0) * 1000),
@@ -1820,13 +1611,16 @@ def commit_iteration(engine, it: int, chain_out, fetch_log, counts: dict,
     buf.append(row)
     io.state["metrics_buffer"] = buf
 
+    # the seed starts from an empty frontier: it replaces whatever an
+    # earlier seed into this workdir left pending
+    before = io.state if it else {}
     pending_next = (
-        int(io.state.get("pending", 0))
+        int(before.get("pending", 0))
         - n_ready
-        + engine._sched_counts.get("accept", 0)
+        + sched_counts.get("accept", 0)
     )
     if cfg.delay_ms > 0:
-        new_buckets |= set(io.state.get("pending_buckets") or [])
+        new_buckets |= set(before.get("pending_buckets") or [])
     engine._maybe_compact()
     io.set_state(iter=it, pending=pending_next,
                  pending_buckets=sorted(new_buckets),

@@ -1,19 +1,25 @@
 """TableIO — snapshot-versioned tables with an atomic manifest.
 
-The design target is Iceberg (snapshot isolation, fast appends, MERGE,
-rollback): no Iceberg runtime jar exists in this sandbox (and no ivy cache to
-resolve one), so TableIO provides the same narrow contract the engine needs
-over plain parquet data directories plus a JSON manifest — the same shape as
-Iceberg's metadata tree (manifest → data files), one level shallower. On a
-cluster with iceberg-spark-runtime on the classpath the call sites map 1:1
-onto Iceberg tables; this fallback keeps every test green offline.
+The design target is Iceberg (snapshot isolation, fast appends, partition
+overwrites, rollback): no Iceberg runtime jar exists in this sandbox (and no
+ivy cache to resolve one), so TableIO provides the same narrow contract the
+engine needs over plain parquet data directories plus a JSON manifest — the
+same shape as Iceberg's metadata tree (manifest → data files), one level
+shallower. On a cluster with iceberg-spark-runtime on the classpath the call
+sites map 1:1 onto Iceberg tables; this fallback keeps every test green
+offline.
 
-Scalability contract (this is what makes the crawl loop viable at 10^10 rows):
-- ``append`` writes ONLY the new rows as a new immutable data dir and records
-  a new snapshot = old dirs + new dir. O(new data), never O(table).
-- ``overwrite`` writes a new dir and a snapshot containing only it (used for
-  the compact ``frontier_pending`` queue, whose size is O(live work), not
+Every data file is written on the driver with pyarrow, by the ``*_pdf``
+writers and ``overwrite_partitions_local``; Spark only reads. Scalability
+contract (this is what makes the crawl loop viable at 10^10 rows):
+- ``append_pdf`` writes ONLY the new rows as a new immutable data dir and
+  records a new snapshot = old dirs + new dir. O(new data), never O(table).
+- ``overwrite_pdf`` writes a new dir and a snapshot containing only it (used
+  for the compact ``frontier_pending`` queue, whose size is O(live work), not
   O(history)).
+- the partitioned writers (``append_partitions_pdf``,
+  ``overwrite_partitions_pdf``, ``overwrite_partitions_local``) write one
+  file per touched partition value; untouched partitions keep their dirs.
 - a snapshot is an immutable list of data dirs → time-travel reads and
   rollback are O(1) manifest operations.
 
@@ -44,19 +50,22 @@ from pyspark.sql import DataFrame, SparkSession
 try:  # orjson when present: ~20x faster full-manifest serialization —
     # the manifest (every table's snapshot history) is re-dumped on every
     # commit flush and checkpoint, ~20 ms/dump via stdlib at crawl scale.
-    # Output stays plain JSON (sorted keys, int keys coerced to strings —
-    # the same coercions stdlib json.dump applies); readers keep json.load.
+    # Without OPT_NON_STR_KEYS orjson raises TypeError on a non-str key, so
+    # every manifest key is a str (partition values are stringified by the
+    # writers). With str keys both serializers sort by code point and emit
+    # the same compact bytes for the tables' strings, ints, lists and
+    # bools; only a float in exponent form is spelled differently (1e-05
+    # against 0.00001), which json.load reads back equal.
     import orjson as _orjson
 
-    _ORJSON_OPTS = _orjson.OPT_SORT_KEYS | _orjson.OPT_NON_STR_KEYS
-
     def _json_dumps_sorted(obj) -> bytes:
-        return _orjson.dumps(obj, option=_ORJSON_OPTS)
+        return _orjson.dumps(obj, option=_orjson.OPT_SORT_KEYS)
 
 except ImportError:  # pragma: no cover - sandbox always has orjson
 
     def _json_dumps_sorted(obj) -> bytes:
-        return json.dumps(obj, sort_keys=True).encode()
+        return json.dumps(obj, sort_keys=True, separators=(",", ":"),
+                          ensure_ascii=False).encode()
 from pyspark.sql import types as T
 
 #: selected-file bytes up to which ``TableIO.read_partitions`` builds its
@@ -70,8 +79,8 @@ LOCAL_READ_MAX_BYTES = 16 * 1024 * 1024
 
 class TableIO:
     """Thread-safe: commits from concurrent writer threads serialize on a
-    manifest lock (the engine issues independent table writes in parallel —
-    each is its own Spark job)."""
+    manifest lock (the engine's commit writes its independent tables from
+    a thread pool)."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -136,9 +145,9 @@ class TableIO:
         return self._manifest["state"]
 
     def set_state(self, **kv) -> None:
-        # under the manifest lock: the engine's deferred commit writers
-        # (plans/engine.py) run _commit concurrently with the main thread's
-        # set_state — unlocked, both would race _write_manifest's
+        # under the manifest lock: commit writer threads may run _commit
+        # concurrently with another thread's set_state — unlocked, both
+        # would race _write_manifest's
         # tmp-then-rename (the second os.replace finds the tmp gone) and
         # json.dump could iterate a dict mid-mutation
         with self._lock:
@@ -192,14 +201,6 @@ class TableIO:
             os.path.join(self.root, name, dirs[-1])
         )
 
-    def _write_dir(self, name: str, df: DataFrame) -> str:
-        with self._lock:
-            t = self._tbl(name)
-            d = f"data-{t['next_dir']:06d}"
-            t["next_dir"] += 1
-        df.write.mode("overwrite").parquet(os.path.join(self.root, name, d))
-        return d
-
     def _commit(self, name: str, dirs: list[str], schema: T.StructType) -> int:
         with self._lock:
             t = self._tbl(name)
@@ -210,62 +211,16 @@ class TableIO:
             self._write_manifest()
             return t["current"]
 
-    # ---------- operations ----------
-
-    def overwrite(self, name: str, df: DataFrame) -> int:
-        d = self._write_dir(name, df)
-        return self._commit(name, [d], df.schema)
-
-    def append(self, name: str, df: DataFrame) -> int:
-        """O(new rows): writes only the appended data, extends the snapshot."""
-        d = self._write_dir(name, df)
-        with self._lock:
-            t = self._tbl(name)
-            cur = list(t["snapshots"].get(str(t["current"]), []))
-            return self._commit(name, cur + [d], df.schema)
-
     # ---------- partitioned tables ----------
     #
     # Partition-level commits are what make the per-iteration state writes
     # O(touched work) instead of O(table): the manifest maps every partition
-    # value to the data dirs holding its rows, so an overwrite of K touched
-    # partitions leaves the other partitions' dir pointers untouched (the
-    # Iceberg analogue is dynamic-partition-overwrite / bucket partitioning).
-    # Physically each write is df.write.partitionBy(dup-col) — one subdir per
-    # value — and the partition column itself stays in the data files (it is
-    # duplicated into `_pc` for the directory layout), so reads never depend
-    # on directory-name parsing.
-
-    def _write_part_dir(self, name: str, df: DataFrame, part_col: str,
-                        n_files: int | None = None):
-        """Write df partitioned by part_col; returns (data_dir, {value: relpath}).
-
-        One file per touched value either way. Default: repartition by the
-        partition column at the session shuffle parallelism (the big-data
-        layout). ``n_files``: hash the partition column into that many write
-        tasks instead — a bounded-parallelism shuffle of a SMALL commit.
-        (An earlier coalesce(n_files) variant skipped this tiny shuffle but
-        let every task write every subdir it saw — a fat iteration then
-        committed n_files x n_values files, ~4k tiny parquet footers for
-        job_state alone, and the write + every downstream partition read
-        paid per-file overhead; profiled at 7s per deferred writer at 4N.)"""
-        from pyspark.sql import functions as F
-        with self._lock:
-            t = self._tbl(name)
-            d = f"data-{t['next_dir']:06d}"
-            t["next_dir"] += 1
-        path = os.path.join(self.root, name, d)
-        out = df.withColumn("_pc", F.col(part_col))
-        out = (
-            out.repartition(n_files, F.col("_pc")) if n_files
-            else out.repartition(F.col("_pc"))
-        )
-        out.write.mode("overwrite").partitionBy("_pc").parquet(path)
-        written = {}
-        for sub in os.listdir(path):
-            if sub.startswith("_pc="):
-                written[sub[len("_pc="):]] = f"{d}/{sub}"
-        return d, written
+    # value (as a str) to the data dirs holding its rows, so an overwrite of
+    # K touched partitions leaves the other partitions' dir pointers
+    # untouched (the Iceberg analogue is dynamic-partition-overwrite /
+    # bucket partitioning). Each touched value's rows go to one file under
+    # ``data-<n>/_pc=<value>/``, and the partition column itself stays in
+    # the data files, so reads never depend on directory-name parsing.
 
     def overwrite_partitions_local(
         self, name: str, rows_by_value: dict, arrow_schema, spark_schema: T.StructType
@@ -336,27 +291,6 @@ class TableIO:
             raise TypeError(f"table {name!r} is not partitioned")
         return snap
 
-    def overwrite_partitions(self, name: str, df: DataFrame, part_col: str,
-                             n_files: int | None = None) -> int:
-        """Overwrite ONLY the partitions present in df; every other
-        partition keeps its current dir list. O(touched partitions)."""
-        _, written = self._write_part_dir(name, df, part_col, n_files)
-        with self._lock:
-            parts = dict(self._parts(name))
-            for v, rel in written.items():
-                parts[v] = [rel]
-            return self._commit_parts(name, parts, df.schema)
-
-    def append_partitions(self, name: str, df: DataFrame, part_col: str,
-                          n_files: int | None = None) -> int:
-        """Append df's rows, extending each touched partition's dir list."""
-        _, written = self._write_part_dir(name, df, part_col, n_files)
-        with self._lock:
-            parts = {k: list(v) for k, v in self._parts(name).items()}
-            for v, rel in written.items():
-                parts.setdefault(v, []).append(rel)
-            return self._commit_parts(name, parts, df.schema)
-
     def _commit_parts(self, name: str, parts: dict, schema: T.StructType) -> int:
         with self._lock:
             t = self._tbl(name)
@@ -417,11 +351,11 @@ class TableIO:
     # A crawl's tail iterations are a few hundred rows: paying multi-stage
     # Spark job latency for them dominates wall time (the same is true on a
     # 1000-executor cluster — tail/thin micro-batches are a known launch-
-    # overhead pathology). These helpers read/write the SAME table layout
-    # with pyarrow directly on the driver, so a thin iteration costs
-    # milliseconds. The files they write are indistinguishable from Spark's
-    # (same dirs, same manifest commits, schema derived from the same
-    # StructType), so Spark and local iterations interleave freely.
+    # overhead pathology). These helpers read/write the table layout with
+    # pyarrow directly on the driver, so a thin iteration costs
+    # milliseconds. They are the only writers: every iteration commits
+    # through them, and Spark reads their files (same dirs, same manifest,
+    # schema derived from the same StructType).
 
     @staticmethod
     def _arrow_schema(spark_schema: T.StructType):
@@ -515,8 +449,9 @@ class TableIO:
         try:
             return pa.concat_tables(tbls).to_pandas()
         except (pa.ArrowInvalid, pa.ArrowTypeError, ValueError):
-            # mixed writers (Spark vs pyarrow) can disagree on field
-            # nullability/metadata — normalize to the first schema
+            # workdirs written before every commit moved to pyarrow mix
+            # Spark-written files in, whose field nullability/metadata can
+            # disagree — normalize to the first schema
             schema = tbls[0].schema
             return pa.concat_tables(
                 [t if t.schema == schema else t.cast(schema) for t in tbls]
@@ -606,7 +541,8 @@ class TableIO:
 
     def append_pdf(self, name: str, pdf, spark_schema: T.StructType,
                    n_files: int = 1) -> int:
-        """Driver-side twin of ``append`` (no Spark job)."""
+        """O(new rows): writes only the appended data as a new dir and
+        extends the snapshot."""
         d = self._write_pdf_dir(name, pdf, spark_schema, n_files)
         with self._lock:
             t = self._tbl(name)
@@ -693,8 +629,9 @@ class TableIO:
     def append_partitions_pdf(
         self, name: str, pdf, part_col: str, spark_schema: T.StructType
     ) -> int:
-        """Driver-side twin of ``append_partitions``: one file per touched
-        partition value, other partitions' dir lists untouched."""
+        """Append ``pdf``'s rows, extending each touched partition's dir
+        list: one file per touched partition value, other partitions' dir
+        lists untouched."""
         written = self._write_partitions_pdf(name, pdf, part_col, spark_schema)
         with self._lock:
             parts = {k: list(vv) for k, vv in self._parts(name).items()}
@@ -705,7 +642,8 @@ class TableIO:
     def overwrite_partitions_pdf(
         self, name: str, pdf, part_col: str, spark_schema: T.StructType
     ) -> int:
-        """Driver-side twin of ``overwrite_partitions``."""
+        """Overwrite ONLY the partitions present in ``pdf``; every other
+        partition keeps its current dir list. O(touched partitions)."""
         written = self._write_partitions_pdf(name, pdf, part_col, spark_schema)
         with self._lock:
             parts = dict(self._parts(name))
@@ -746,8 +684,9 @@ class TableIO:
                 if f.endswith(".parquet")
             )
         # normalize to the table's declared arrow schema before concat:
-        # Spark-written and pyarrow-written files carry different
-        # field/file metadata that concat_tables would reject
+        # workdirs written before every commit moved to pyarrow still hold
+        # Spark-written files, whose field/file metadata concat_tables
+        # would reject next to pyarrow-written ones
         arrow = self._arrow_schema(
             T.StructType.fromJson(self._tbl(name)["schema"])
         )
@@ -849,15 +788,6 @@ class TableIO:
                 name, prefix + [d] + tail,
                 T.StructType.fromJson(t["schema"]),
             )
-
-    def merge_insert_new(self, name: str, df: DataFrame, key: str | list[str]) -> int:
-        """MERGE ... WHEN NOT MATCHED THEN INSERT (dedup-set commit;
-        reference analogue: HashSetDedup commit, main/src/task_filters.rs:199-211).
-        """
-        keys = [key] if isinstance(key, str) else list(key)
-        if self.exists(name):
-            df = df.join(self.read(name).select(*keys), on=keys, how="left_anti")
-        return self.append(name, df)
 
     def rollback(self, name: str, snapshot: int) -> None:
         t = self._tbl(name)
@@ -976,6 +906,3 @@ class TableIO:
     def destroy(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)
 
-
-def empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    return spark.createDataFrame([], schema)

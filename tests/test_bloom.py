@@ -1,15 +1,33 @@
 """Bloom-shard dedup properties: NO false negatives ever; flag equivalence
-with the exact path."""
+with the exact path.
 
-from pyspark.sql import functions as F
+The shards are written the way every engine commit writes them: python
+xxhash64-twin positions merged on the driver (``local_step._bloom_commit``
+→ ``bloom.merge_pairs_local``). They are probed the way a distributed
+iteration probes them: JVM positions (``bloom.probe``, ``bloom.dedup_flag``).
+"""
+
+import pandas as pd
+from pyspark.sql import types as T
 
 from crusty_core_spark.config import CrawlConfig
+from crusty_core_spark.functions.xxh64 import bloom_shard_id
 from crusty_core_spark.operators import bloom
+from crusty_core_spark.plans import local_step
 from crusty_core_spark.sources.tables import TableIO
 
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "job_id long, url string, host string")
+
+
+def _commit(io, cfg, rows):
+    """OR ``rows``' (job_id, url, host) bits into their shards, as an
+    iteration's commit does (fork pool from the same size rule)."""
+    jobs, urls, hosts = (list(c) for c in zip(*rows))
+    shard_by_host = {h: bloom_shard_id(h, cfg.n_bloom_shards) for h in hosts}
+    local_step._bloom_commit(io, cfg, local_step._bloom_pool(cfg, len(rows)),
+                             jobs, urls, hosts, shard_by_host)
 
 
 def test_no_false_negatives_and_backstop(spark, workdir):
@@ -20,15 +38,23 @@ def test_no_false_negatives_and_backstop(spark, workdir):
         for j in range(3)
         for i in range(200)
     ]
-    seen = _df(spark, seen_rows)
-    bloom.update(seen, io, cfg)
-    io.append_partitions(
+    _commit(io, cfg, seen_rows)
+    io.append_partitions_pdf(
         "url_seen",
-        seen.select(
-            "job_id", "url", F.lit(0).cast("long").alias("added_iter"),
-            bloom.shard_id_col(F.col("host"), cfg.n_bloom_shards).alias("shard"),
-        ),
+        pd.DataFrame({
+            "job_id": [r[0] for r in seen_rows],
+            "url": [r[1] for r in seen_rows],
+            "added_iter": 0,
+            "shard": [bloom_shard_id(r[2], cfg.n_bloom_shards)
+                      for r in seen_rows],
+        }),
         "shard",
+        T.StructType([
+            T.StructField("job_id", T.LongType()),
+            T.StructField("url", T.StringType()),
+            T.StructField("added_iter", T.LongType()),
+            T.StructField("shard", T.IntegerType()),
+        ]),
     )
 
     cand_rows = seen_rows[::7] + [
@@ -59,8 +85,8 @@ def test_no_false_negatives_and_backstop(spark, workdir):
 def test_incremental_update_merges(spark, workdir):
     cfg = CrawlConfig(n_bloom_shards=4, bloom_bits_per_shard=1 << 12)
     io = TableIO(spark, workdir)
-    bloom.update(_df(spark, [(1, "http://a.x/1", "a.x")]), io, cfg)
-    bloom.update(_df(spark, [(1, "http://a.x/2", "a.x")]), io, cfg)
+    _commit(io, cfg, [(1, "http://a.x/1", "a.x")])
+    _commit(io, cfg, [(1, "http://a.x/2", "a.x")])
     probed = bloom.probe(
         _df(spark, [(1, "http://a.x/1", "a.x"), (1, "http://a.x/2", "a.x")]),
         io, cfg,
@@ -77,11 +103,7 @@ def test_update_leaves_untouched_shards_byte_identical(spark, workdir):
 
     cfg = CrawlConfig(n_bloom_shards=8, bloom_bits_per_shard=1 << 12)
     io = TableIO(spark, workdir)
-    many = _df(
-        spark,
-        [(1, f"http://h{i}.x/p", f"h{i}.x") for i in range(40)],
-    )
-    bloom.update(many, io, cfg)
+    _commit(io, cfg, [(1, f"http://h{i}.x/p", f"h{i}.x") for i in range(40)])
 
     def files():
         out = {}
@@ -96,9 +118,9 @@ def test_update_leaves_untouched_shards_byte_identical(spark, workdir):
         return out
 
     before = files()
-    one = _df(spark, [(2, "http://h0.x/new", "h0.x")])
-    bloom.update(one, io, cfg)
+    _commit(io, cfg, [(2, "http://h0.x/new", "h0.x")])
     after = files()
+    assert len(after) == len(before) + 1  # one touched shard rewritten
     for rel, meta in before.items():
         assert after[rel] == meta  # old files untouched (append-only dirs)
     # and the touched shard's probe still sees both generations

@@ -3,10 +3,9 @@ partition reads.
 
 A distributed iteration collects its cached chain output and fetch_log
 once and commits them on the driver through ``local_step.commit_iteration``
-(the local path's commit); a distributed seed commits through
-``local_step.commit_seed``. ``TableIO.read_partitions`` serves small
-selections from the driver's Arrow file cache instead of a Spark parquet
-scan. Path parity (distributed against local) is pinned by
+(the local path's commit); both seed paths commit there too, as iteration
+0. ``TableIO.read_partitions`` serves small selections from the driver's
+Arrow file cache instead of a Spark parquet scan. Path parity (distributed against local) is pinned by
 tests/test_fastpath.py; these tests check the mechanisms by counting Spark
 jobs and watching the fork pool, not by timing.
 """
@@ -60,8 +59,9 @@ def _jobs_started(spark, fn):
 # ----------------------------------------------------------- read_partitions
 
 def _partitioned_table(spark, io, n_parts=120):
-    """A table over ``n_parts`` partition dirs, written by both writers
-    (pyarrow twins and a Spark job), with nulls in a nullable column."""
+    """A table over ``n_parts`` partition dirs, written in two commits (the
+    second extends 40 of the partitions), with nulls in a nullable
+    column."""
     import pandas as pd
 
     schema = spark.createDataFrame(
@@ -75,15 +75,15 @@ def _partitioned_table(spark, io, n_parts=120):
         "shard": [i % n_parts for i in range(3 * n_parts)],
     })
     io.append_partitions_pdf("t", rows, "shard", schema)
-    io.append_partitions(
+    io.append_partitions_pdf(
         "t",
-        spark.createDataFrame(
+        pd.DataFrame(
             [(10_000 + i, f"http://s{i}.example/", 9, i % 40)
              for i in range(80)],
-            schema,
+            columns=["job_id", "url", "added_iter", "shard"],
         ),
         "shard",
-        n_files=4,
+        schema,
     )
     return schema
 
@@ -121,9 +121,10 @@ def test_read_partitions_arrow_route_equals_spark(spark, workdir,
 def test_distributed_commit_forks_before_writers(spark, workdir,
                                                  monkeypatch):
     """The Bloom positions go through the fork pool on every iteration with
-    accepted tasks. The pool must be resolved on the step's thread while no
-    commit-pool writer runs, never lazily from a commit-pool thread: a
-    fork copies the locks the running threads hold."""
+    accepted tasks, the seed (iteration 0) included. The pool must be
+    resolved on the step's thread while no commit-pool writer runs, never
+    lazily from a commit-pool thread: a fork copies the locks the running
+    threads hold."""
     spec = CorpusSpec(n_hosts=5, base_pages_per_host=10, seed=31)
     rows, seeds = gen_corpus(spec)
     running = []  # commit-pool tasks started and not yet finished
@@ -159,11 +160,13 @@ def test_distributed_commit_forks_before_writers(spark, workdir,
     try:
         eng = CrawlEngine(spark, pages_df(spark, rows), workdir, cfg)
         eng.seed(seeds)
+        seed_calls = len(calls)
         stats = eng.run()
     finally:
         if local_step._POOL is not None:
             local_step._POOL.terminate()
     assert stats["dist_iters"] > 0 and stats["local_iters"] == 0
+    assert seed_calls > 0  # the distributed seed's commit used the pool
     assert any(forked for _, _, forked in calls)
     assert all(main and n_running == 0 for main, n_running, _ in calls)
     assert eng.io.read_partitions("url_seen_shards").count() > 0

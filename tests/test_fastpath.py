@@ -208,11 +208,13 @@ def test_seed_local_vs_distributed(spark, workdir):
                             "depth", "target", "marker", "action", "iter")
                     .collect()
                 )
+                # per-action scheduling totals from the counts-only rows
+                ch = eng.io.read_local(
+                    "chain", ["row_kind", "action", "parent_seq_num"])
+                sc = ch[ch["row_kind"] == "sched_count"]
                 sched_totals = sorted(
-                    tuple(r)
-                    for r in eng._sched_agg(
-                        eng.io.read("chain"))
-                    .collect()
+                    sc.groupby("action")["parent_seq_num"].sum()
+                    .astype(int).items()
                 ) if not eng.cfg.sched_log_detail else None
                 seen = sorted(
                     tuple(r) for r in eng.url_seen_df().collect()

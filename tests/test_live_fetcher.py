@@ -96,14 +96,14 @@ def live_server():
 
 
 def _cfg(**kw):
-    return CrawlConfig(
-        max_response_size=MAX_SZ,
-        connect_timeout_ms=2000,
-        status_timeout_ms=2000,
-        load_timeout_ms=4000,
-        compact_max_files=None,
+    return CrawlConfig(**{
+        "max_response_size": MAX_SZ,
+        "connect_timeout_ms": 2000,
+        "status_timeout_ms": 2000,
+        "load_timeout_ms": 4000,
+        "compact_max_files": None,
         **kw,
-    )
+    })
 
 
 def _pages_df(spark, port, site):
@@ -218,8 +218,11 @@ def test_fetch_deadline_straggler_carryover(spark, workdir, live_server):
     import time
 
     port, site = live_server
+    # the deadline-exempt refetch runs under the per-task timeouts, so its
+    # socket timeout (connect + status) must clear the handler's SLOW_S
+    # sleep: at 2 s + 2 s = SLOW_S the refetch raced the response
     cfg = _cfg(robots_txt=False, fetch_deadline_ms=800,
-               local_iter_threshold=0)
+               local_iter_threshold=0, status_timeout_ms=4000)
     eng = CrawlEngine(spark, None, workdir + "/slow_live", cfg)
     eng.seed([(0, f"{BASE}/slowroot")])
     t1 = time.time()

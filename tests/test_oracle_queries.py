@@ -58,3 +58,35 @@ def test_query_matches_oracle(spark, duck, name):
     assert sorted(sdf.columns) == sorted(ocols)
     assert len(srows) == len(orows)
     assert value_hash(srows, sdf.columns) == value_hash(orows, ocols)
+
+
+def test_prefetch_failure_is_logged(tmp_path, caplog):
+    """The table-handle prefetch thread logs a failed read at debug level
+    instead of dropping it. A stand-in session: no Spark job runs."""
+    import logging
+    import threading
+    from types import SimpleNamespace
+
+    from crusty_core_spark import entry_queries as EQ
+
+    for t in EQ._FIXTURE_TABLES:
+        (tmp_path / f"{t}.parquet").write_bytes(b"")
+    first = f"{tmp_path}/{EQ._FIXTURE_TABLES[0]}.parquet"
+    failed = threading.Event()
+
+    def parquet(path):
+        if path == first:
+            return "handle"
+        failed.set()
+        raise OSError("unreadable")
+
+    fake = SimpleNamespace(read=SimpleNamespace(parquet=parquet))
+    with caplog.at_level(logging.DEBUG, logger=EQ.__name__):
+        assert EQ._t(fake, str(tmp_path), EQ._FIXTURE_TABLES[0]) == "handle"
+        assert failed.wait(10)
+        for _ in range(200):
+            if caplog.records:
+                break
+            threading.Event().wait(0.05)
+    assert any("prefetch of" in r.getMessage() and r.exc_info
+               for r in caplog.records)

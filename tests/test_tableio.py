@@ -1,16 +1,24 @@
-"""TableIO snapshot/append/rollback/checkpoint semantics."""
+"""TableIO snapshot/append/rollback/checkpoint semantics, over tables
+written with the pyarrow writers every engine commit uses."""
+
+import pandas as pd
+from pyspark.sql import types as T
 
 from crusty_core_spark.sources.tables import TableIO
 
+SCHEMA = T.StructType([T.StructField("k", T.LongType()),
+                       T.StructField("v", T.StringType())])
+PSCHEMA = T.StructType(list(SCHEMA) + [T.StructField("b", T.IntegerType())])
 
-def df(spark, rows):
-    return spark.createDataFrame(rows, "k long, v string")
+
+def df(rows):
+    return pd.DataFrame(rows, columns=["k", "v"])
 
 
 def test_append_is_incremental_and_snapshotted(spark, workdir):
     io = TableIO(spark, workdir)
-    io.overwrite("t", df(spark, [(1, "a")]))
-    s2 = io.append("t", df(spark, [(2, "b")]))
+    io.overwrite_pdf("t", df([(1, "a")]), SCHEMA)
+    s2 = io.append_pdf("t", df([(2, "b")]), SCHEMA)
     assert sorted(r.k for r in io.read("t").collect()) == [1, 2]
     # time travel to snapshot 1
     assert [r.k for r in io.read("t", snapshot=1).collect()] == [1]
@@ -20,28 +28,20 @@ def test_append_is_incremental_and_snapshotted(spark, workdir):
     assert sorted(r.k for r in io.read("t").collect()) == [1, 2]
 
 
-def test_merge_insert_new(spark, workdir):
-    io = TableIO(spark, workdir)
-    io.overwrite("t", df(spark, [(1, "a"), (2, "b")]))
-    io.merge_insert_new("t", df(spark, [(2, "DUP"), (3, "c")]), key="k")
-    rows = {r.k: r.v for r in io.read("t").collect()}
-    assert rows == {1: "a", 2: "b", 3: "c"}  # existing key untouched
-
-
 def test_empty_table_roundtrip(spark, workdir):
     io = TableIO(spark, workdir)
-    io.overwrite("t", df(spark, []))
+    io.overwrite_pdf("t", df([]), SCHEMA)
     assert io.read("t").count() == 0
-    io.append("t", df(spark, [(5, "x")]))
+    io.append_pdf("t", df([(5, "x")]), SCHEMA)
     assert io.read("t").count() == 1
 
 
 def test_checkpoint_restore(spark, workdir):
     io = TableIO(spark, workdir)
-    io.overwrite("t", df(spark, [(1, "a")]))
+    io.overwrite_pdf("t", df([(1, "a")]), SCHEMA)
     io.set_state(iter=1)
     ck = io.checkpoint("one")
-    io.append("t", df(spark, [(2, "b")]))
+    io.append_pdf("t", df([(2, "b")]), SCHEMA)
     io.set_state(iter=2)
     io.checkpoint("two")
     # crash simulation: restore to the first checkpoint
@@ -51,8 +51,8 @@ def test_checkpoint_restore(spark, workdir):
     assert io2.state["iter"] == 1
 
 
-def _pdf(spark, rows):
-    return spark.createDataFrame(rows, "k long, v string, b int")
+def _pdf(rows):
+    return pd.DataFrame(rows, columns=["k", "v", "b"])
 
 
 def _files(root, sub):
@@ -74,11 +74,11 @@ def test_overwrite_partitions_touches_only_touched(spark, workdir):
     """Partition-level overwrite: untouched partitions' files stay
     byte-identical (same path, same mtime/size) across a commit."""
     io = TableIO(spark, workdir)
-    io.overwrite_partitions(
-        "t", _pdf(spark, [(1, "a", 0), (2, "b", 1), (3, "c", 2)]), "b"
+    io.overwrite_partitions_pdf(
+        "t", _pdf([(1, "a", 0), (2, "b", 1), (3, "c", 2)]), "b", PSCHEMA
     )
     before = _files(workdir, "t")
-    io.overwrite_partitions("t", _pdf(spark, [(9, "z", 1)]), "b")
+    io.overwrite_partitions_pdf("t", _pdf([(9, "z", 1)]), "b", PSCHEMA)
     after = _files(workdir, "t")
     # every file of the first commit still exists unmodified
     for rel, meta in before.items():
@@ -92,8 +92,9 @@ def test_overwrite_partitions_touches_only_touched(spark, workdir):
 
 def test_append_partitions_accumulates(spark, workdir):
     io = TableIO(spark, workdir)
-    io.append_partitions("t", _pdf(spark, [(1, "a", 0), (2, "b", 1)]), "b")
-    io.append_partitions("t", _pdf(spark, [(3, "c", 1)]), "b")
+    io.append_partitions_pdf("t", _pdf([(1, "a", 0), (2, "b", 1)]), "b",
+                             PSCHEMA)
+    io.append_partitions_pdf("t", _pdf([(3, "c", 1)]), "b", PSCHEMA)
     assert sorted(r.k for r in io.read_partitions("t").collect()) == [1, 2, 3]
     assert sorted(r.k for r in io.read_partitions("t", [1]).collect()) == [2, 3]
     # full read via read() delegates for partitioned tables
@@ -102,9 +103,10 @@ def test_append_partitions_accumulates(spark, workdir):
 
 def test_partitioned_checkpoint_rollback(spark, workdir):
     io = TableIO(spark, workdir)
-    io.overwrite_partitions("t", _pdf(spark, [(1, "a", 0), (2, "b", 1)]), "b")
+    io.overwrite_partitions_pdf("t", _pdf([(1, "a", 0), (2, "b", 1)]), "b",
+                                PSCHEMA)
     ck = io.checkpoint("p1")
-    io.overwrite_partitions("t", _pdf(spark, [(9, "z", 1)]), "b")
+    io.overwrite_partitions_pdf("t", _pdf([(9, "z", 1)]), "b", PSCHEMA)
     assert {r.k for r in io.read_partitions("t").collect()} == {1, 9}
     io.restore(ck)
     assert {r.k for r in io.read_partitions("t").collect()} == {1, 2}
@@ -155,7 +157,7 @@ def test_compact_partitions_bounds_files(spark, workdir):
 def test_compact_appends_preserves_last_dir(spark, workdir):
     io = TableIO(spark, workdir)
     for i in range(20):
-        io.append("t", df(spark, [(i, f"v{i}")]))
+        io.append_pdf("t", df([(i, f"v{i}")]), SCHEMA)
     last_before = [tuple(r) for r in io.read_last_append("t").collect()]
     before = sorted(tuple(r) for r in io.read("t").collect())
     assert io.compact_appends("t", max_dirs=8, keep_last=1) is not None
@@ -177,7 +179,7 @@ def test_expire_snapshots_bounds_manifest_and_gcs_dirs(spark, workdir):
     # GC converges within the retention window)
     removed = 0
     for i in range(18):
-        io.append("t", df(spark, [(i, f"v{i}")]))
+        io.append_pdf("t", df([(i, f"v{i}")]), SCHEMA)
         if i == 11:
             io.compact_appends("t", max_dirs=4, keep_last=1)
         io.expire_checkpoints(3)
@@ -222,13 +224,11 @@ def test_expire_snapshots_bounds_manifest_and_gcs_dirs(spark, workdir):
 
 def test_expire_snapshots_partitioned(spark, workdir):
     io = TableIO(spark, workdir)
-    pdf = spark.createDataFrame(
-        [(i, f"v{i}", i % 2) for i in range(10)], "k long, v string, p int"
+    io.overwrite_partitions_pdf(
+        "t", _pdf([(i, f"v{i}", i % 2) for i in range(10)]), "b", PSCHEMA
     )
-    io.overwrite_partitions("t", pdf, "p")
     for i in range(6):
-        upd = spark.createDataFrame([(100 + i, "u", 0)], "k long, v string, p int")
-        io.append_partitions("t", upd, "p")
+        io.append_partitions_pdf("t", _pdf([(100 + i, "u", 0)]), "b", PSCHEMA)
     before = sorted(tuple(r) for r in io.read_partitions("t").collect())
     io.expire_checkpoints(2)
     io.expire_snapshots(2)
@@ -247,7 +247,7 @@ def test_compact_appends_tiered_no_head_remerge(spark, workdir):
     def add(k):
         nonlocal n
         for _ in range(k):
-            io.append("t", df(spark, [(n, f"v{n}")]))
+            io.append_pdf("t", df([(n, f"v{n}")]), SCHEMA)
             n += 1
 
     add(10)
@@ -303,3 +303,32 @@ def test_compact_partitions_tiered(spark, workdir):
     assert len(rels) == 2
     # per-partition read order preserved across tiers
     assert list(io.read_partitions_local("t", [0])["k"]) == list(range(n))
+
+
+def test_manifest_bytes_do_not_depend_on_serializer(tmp_path):
+    """Every manifest key is a str, partition values included, so orjson
+    and the stdlib serializer write the same bytes; a non-str key is
+    refused rather than coerced. No Spark session is needed."""
+    import json
+
+    import pytest
+
+    from crusty_core_spark.sources import tables
+
+    io = TableIO(None, str(tmp_path))
+    # int partition values sort differently as ints (1, 2, 10, 100) and as
+    # strings ("1", "10", "100", "2")
+    io.append_partitions_pdf(
+        "t", _pdf([(i, f"v{i}", i) for i in (1, 2, 10, 100)]), "b", PSCHEMA
+    )
+    io.overwrite_partitions_pdf("t", _pdf([(3, "w", 10)]), "b", PSCHEMA)
+    io.append_pdf("u", df([(1, "a")]), SCHEMA)
+    io.set_state(iter=3, pending_buckets=[10, 2, 1])
+    manifest = io._manifest
+    got = tables._json_dumps_sorted(manifest)
+    assert got == json.dumps(manifest, sort_keys=True, separators=(",", ":"),
+                             ensure_ascii=False).encode()
+    with open(io._manifest_path, "rb") as f:
+        assert f.read() == got
+    with pytest.raises(TypeError):
+        tables._json_dumps_sorted({"tables": {1: "x"}})
