@@ -112,7 +112,8 @@ QUERIES: dict[str, tuple] = {}
 
 
 def _cos_sql(a: str, b: str) -> str:
-    """DuckDB cosine(a, b) rounded to 6 — the exact twin of vectors.cosine."""
+    """DuckDB cosine(a, b) rounded to 6 — the oracle spelling of
+    vectors.cosine_expr."""
     return (
         f"ROUND(list_sum([x[1] * x[2] FOR x IN list_zip({a}, {b})])"
         f" / (sqrt(list_sum([v * v FOR v IN {a}]))"
@@ -481,7 +482,7 @@ def q24(spark, sf):
 )
 def q07(spark, sf):
     d = _t(spark, sf, "documents")
-    return d.groupBy(TX.fingerprint(F.col("text")).alias("fp")).agg(
+    return d.groupBy(F.expr(TX.fingerprint_expr("text")).alias("fp")).agg(
         F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_doc")
     )
 
@@ -498,7 +499,7 @@ def q07(spark, sf):
 )
 def q10(spark, sf):
     d = _t(spark, sf, "documents").withColumn(
-        "fp", TX.fingerprint(F.col("text"))
+        "fp", F.expr(TX.fingerprint_expr("text"))
     )
     w = W.partitionBy("fp").orderBy("doc_id")
     return (
@@ -519,12 +520,11 @@ def q10(spark, sf):
 )
 def q11(spark, sf):
     d = _t(spark, sf, "documents")
+    n = TX.token_count_expr("text")
     return d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(TX.token_count(F.col("text"))).alias("sum_tokens"),
-        F.round(
-            F.sum(TX.token_count(F.col("text"))) * 1.0 / F.count("*"), 4
-        ).alias("avg_tokens"),
+        F.expr(f"sum({n})").alias("sum_tokens"),
+        F.expr(f"round(sum({n}) * 1.0D / count(*), 4)").alias("avg_tokens"),
     )
 
 
@@ -569,11 +569,11 @@ QUERIES["q12_lang_id"] = (
 )
 def q13(spark, sf):
     d = _t(spark, sf, "documents")
-    return d.select(
+    return d.selectExpr(
         "doc_id",
-        TX.token_count(F.col("text")).alias("n_tokens"),
-        F.round(TX.avg_word_len(F.col("text")), 6).alias("avg_word_len"),
-        F.round(TX.punct_ratio(F.col("text")), 6).alias("punct_ratio"),
+        f"{TX.token_count_expr('text')} AS n_tokens",
+        f"round({TX.avg_word_len_expr('text')}, 6) AS avg_word_len",
+        f"round({TX.punct_ratio_expr('text')}, 6) AS punct_ratio",
     )
 
 
@@ -601,8 +601,8 @@ QUERIES["q14_simhash"] = (
 @q("q15_minhash_signature", None)
 def q15(spark, sf):
     d = _t(spark, sf, "documents")
-    sig = D.minhash_signature(D.word_shingles(F.col("text"), 1), 8)
-    return d.select("doc_id", F.concat_ws("|", sig).alias("signature"))
+    sig = D.minhash_signature_expr(D.word_shingles_expr("text", 1), 8)
+    return d.selectExpr("doc_id", f"concat_ws('|', {sig}) AS signature")
 
 
 QUERIES["q15_minhash_signature"] = (
@@ -731,7 +731,7 @@ def q19(spark, sf):
     assigned = V.ivf_assign(e.select("vec_id", "embedding"), cents)
     a = assigned.alias("a")
     b = assigned.alias("b")
-    cos = F.round(V.cosine(F.col("a.embedding"), F.col("b.embedding")), 6)
+    cos = F.expr(f"round({V.cosine_expr('a.embedding', 'b.embedding')}, 6)")
     return (
         a.join(
             b,
@@ -782,10 +782,9 @@ def q20(spark, sf):
 def q22(spark, sf):
     # find_duplicate_titles analogue (examples/find_duplicate_titles/main.rs:34-42)
     d = _t(spark, sf, "documents")
-    toks = TX.tokens(F.col("text"))
-    title = F.concat_ws(" ", F.slice(toks, 1, 2))
+    title = f"concat_ws(' ', slice({TX.tokens_expr('text')}, 1, 2))"
     return (
-        d.select("doc_id", title.alias("title"))
+        d.selectExpr("doc_id", f"{title} AS title")
         .groupBy("title")
         .agg(
             F.count("*").alias("n_docs"),

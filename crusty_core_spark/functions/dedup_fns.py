@@ -1,7 +1,12 @@
 """Near-duplicate detection primitives for web-scale corpus curation.
 
-All JVM-side Column expressions (array/lambda higher-order functions — no
-Python crossing) with exact DuckDB-SQL twins for the oracle:
+The Spark-side builders return Spark-SQL text (``*_expr``) for
+``selectExpr``/``F.expr``: array and lambda higher-order functions parsed
+JVM-side in one py4j round trip, with no Python crossing. Building the same
+trees through the Column API cost hundreds to thousands of py4j round trips
+per call (each lambda is its own JVM callback; 2,534 for the 16 simhash
+votes alone), 0.4-0.9 s of driver time on the q14/q16/q17 clock. The
+``*_sql`` builders spell each computation for the DuckDB oracle.
 
 - word shingles (k-grams)
 - MinHash signatures over md5-hashed shingles (a lexicographic min over
@@ -11,7 +16,7 @@ Python crossing) with exact DuckDB-SQL twins for the oracle:
   = docs sharing a band key
 - SimHash (16-bit variant): per hex position of md5(token), majority vote of
   high/low nibble → a 16-char bitstring
-- n-gram Jaccard similarity via explode + pair aggregation
+- n-gram Jaccard similarity verified over LSH candidate pairs
 
 Scale notes: the LSH pipeline is shuffle-shaped as
   explode(bands) → groupBy(band_key) → pair-join within buckets,
@@ -22,57 +27,22 @@ single projection over the tokens array (one pass, no shuffle).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crusty_core_spark.functions.text import tokens
-
-# Spark-SQL *_expr twins of the Column builders below (same expression
-# trees, parsed JVM-side in ONE py4j round trip). The Column versions cost
-# hundreds-to-thousands of py4j round trips per call — each lambda in a
-# higher-order function is its own JVM callback dance — which put 0.4-0.9 s
-# of pure driver-side plan construction on the bench clock for q14/q16/q17
-# (cProfile: 2,534 round trips for the 16 simhash votes alone). The _expr
-# twins feed F.expr()/selectExpr() with the identical expression spelled as
-# SQL text; results and physical plans are unchanged (lambda variable names
-# aside), pinned by tests/test_expr_twins.py.
-
-
-def tokens_expr(col: str) -> str:
-    """Spark-SQL twin of text.tokens(col) for an expression string."""
-    return (
-        f"CASE WHEN length(trim({col})) = 0 "
-        f"THEN cast(array() as array<string>) "
-        f"ELSE split(trim({col}), '\\\\s+') END"
-    )
+from crusty_core_spark.functions.text import ident, tokens_expr
 
 
 # ---------------------------------------------------------------- shingles
 
-def word_shingles(col: Column, k: int = 2) -> Column:
+def word_shingles_expr(col: str, k: int = 2) -> str:
     """Distinct word k-grams, joined by a single space.
 
     Built by zipping k shifted slices of the token array — NOT by indexing
     the array inside a lambda: higher-order functions evaluate interpreted,
-    and an ``element_at(tokens(col), i)`` in the lambda body re-runs the
-    whole split() PER ELEMENT (measured ~10x the cost of the entire minhash
+    and an ``element_at(tokens, i)`` in the lambda body re-runs the whole
+    split() PER ELEMENT (measured ~10x the cost of the entire minhash
     stage). zip_with evaluates each operand once per row."""
-    toks = tokens(col)
-    if k == 1:
-        return F.array_distinct(toks)
-    m = F.greatest(F.size(toks) - (k - 1), F.lit(0))
-    grams = F.slice(toks, 1, m)
-    for j in range(1, k):
-        grams = F.zip_with(
-            grams,
-            F.slice(toks, j + 1, m),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    return F.array_distinct(grams)
-
-
-def word_shingles_expr(col: str, k: int = 2) -> str:
-    """Spark-SQL twin of word_shingles (same zip_with-of-slices tree)."""
     toks = tokens_expr(col)
     if k == 1:
         return f"array_distinct({toks})"
@@ -97,16 +67,14 @@ def word_shingles_sql(col: str, k: int = 2) -> str:
 
 # ---------------------------------------------------------------- minhash
 
-def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
-    """Array of ``num_hashes`` lexicographic-min md5 digests."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{j}:"), s)))
-            )
-            for j in range(num_hashes)
-        ]
+def minhash_signature_expr(shingles: str, num_hashes: int = 8) -> str:
+    """Array of ``num_hashes`` lexicographic-min md5 digests over the
+    ``shingles`` array EXPRESSION (e.g. a word_shingles_expr)."""
+    mins = ", ".join(
+        f"array_min(transform({shingles}, s -> md5(concat('{j}:', s))))"
+        for j in range(num_hashes)
     )
+    return f"array({mins})"
 
 
 def minhash_signature_sql(shingles: str, num_hashes: int = 8) -> str:
@@ -117,33 +85,15 @@ def minhash_signature_sql(shingles: str, num_hashes: int = 8) -> str:
     return f"[{mins}]"
 
 
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """One md5 key per band: md5(band_index : minhash slice)."""
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.lit(str(b)),
-                    *[
-                        F.element_at(signature, b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ],
-                )
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def lsh_band_keys_expr(signature: str, bands: int, rows_per_band: int) -> str:
-    """Spark-SQL twin of lsh_band_keys (same md5-over-concat_ws tree)."""
+    """One md5 key per band: md5(band_index | minhash slice)."""
+    sig = ident(signature)
     keys = ", ".join(
         "md5(concat_ws('|', '%d', %s))"
         % (
             b,
             ", ".join(
-                f"element_at({signature}, {b * rows_per_band + r + 1})"
+                f"element_at({sig}, {b * rows_per_band + r + 1})"
                 for r in range(rows_per_band)
             ),
         )
@@ -176,7 +126,7 @@ def shingle_frame(
     the larger shingle arrays (isolated: signature materialization
     1.78 s → ~0.8 s cold with the shingling parallel)."""
     return df.selectExpr(
-        f"{id_col} AS doc", f"{text_col} AS _t"
+        f"{ident(id_col)} AS doc", f"{ident(text_col)} AS _t"
     ).repartition(F.col("doc")).selectExpr(
         "doc", f"{word_shingles_expr('_t', k)} AS _sh"
     )
@@ -255,14 +205,18 @@ def lsh_candidate_pairs(
 # ---------------------------------------------------------------- simhash
 
 def token_md5s_expr(col: str) -> str:
-    """Spark-SQL twin of token_md5s."""
+    """md5 per whitespace token — the shared input of the 16 simhash bit
+    votes. Stage this behind an exchange boundary so each token is hashed
+    ONCE instead of once per bit position (16x less md5 work), and the
+    votes run on all cores instead of inside a single scan task."""
     return f"transform({tokens_expr(col)}, t -> md5(t))"
 
 
 def simhash16_from_hashes_expr(h: str) -> str:
-    """Spark-SQL twin of simhash16_from_hashes (the 16 bit-vote
-    aggregates were the single most py4j-expensive constructor in the
-    bench: 2,534 round trips ≈ 0.55 s on the q14 clock)."""
+    """16-bit SimHash as a bitstring over a precomputed md5(token) array
+    column (see token_md5s_expr): bit_p = sign of Σ_tokens (+1 if hex digit
+    p of md5(token) ≥ '8' else −1)."""
+    h = ident(h)
     bits = []
     for p in range(1, 17):
         vote = (
@@ -272,49 +226,6 @@ def simhash16_from_hashes_expr(h: str) -> str:
         )
         bits.append(f"CASE WHEN {vote} > 0 THEN '1' ELSE '0' END")
     return "concat(" + ", ".join(bits) + ")"
-
-
-def token_md5s(col: Column) -> Column:
-    """md5 per whitespace token — the shared input of the 16 simhash bit
-    votes. Stage this behind an exchange boundary so each token is hashed
-    ONCE instead of once per bit position (16x less md5 work), and the
-    votes run on all cores instead of inside a single scan task."""
-    return F.transform(tokens(col), lambda t: F.md5(t))
-
-
-def simhash16_from_hashes(h: Column) -> Column:
-    """simhash16 over a precomputed md5(token) array (see token_md5s);
-    bit-identical to simhash16: substring(md5(t), p, 1) == substring(h, p, 1)."""
-    bits = []
-    for p in range(1, 17):
-        vote = F.aggregate(
-            h,
-            F.lit(0),
-            lambda acc, t: acc
-            + F.when(
-                F.substring(t, p, 1).isin(*"89abcdef"), F.lit(1)
-            ).otherwise(F.lit(-1)),
-        )
-        bits.append(F.when(vote > 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
-def simhash16(col: Column) -> Column:
-    """16-bit SimHash as a bitstring: for hex position p of md5(token),
-    bit_p = sign of Σ_tokens (+1 if hexdigit ≥ '8' else −1)."""
-    toks = tokens(col)
-    bits = []
-    for p in range(1, 17):
-        vote = F.aggregate(
-            toks,
-            F.lit(0),
-            lambda acc, t: acc
-            + F.when(
-                F.substring(F.md5(t), p, 1).isin(*"89abcdef"), F.lit(1)
-            ).otherwise(F.lit(-1)),
-        )
-        bits.append(F.when(vote > 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
 
 
 def simhash16_sql(col: str = "text") -> str:
@@ -331,49 +242,6 @@ def simhash16_sql(col: str = "text") -> str:
 
 
 # ---------------------------------------------------------------- jaccard
-
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    block_col: str,
-    k: int = 2,
-    threshold: float = 0.2,
-) -> DataFrame:
-    """Exact n-gram Jaccard over pairs within a blocking key.
-
-    explode(shingles) → self-join on (block, shingle) → pair-count →
-    |A∩B| / (|A|+|B|−|A∩B|). Blocking bounds the pair space; at corpus scale
-    the block is an LSH bucket rather than a metadata column.
-    """
-    sh = df.select(
-        F.col(id_col).alias("doc"),
-        F.col(block_col).alias("blk"),
-        F.size(word_shingles(F.col(text_col), k)).alias("n_sh"),
-        F.explode(word_shingles(F.col(text_col), k)).alias("shingle"),
-    )
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, on=["blk", "shingle"])
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .groupBy(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .agg(F.count("*").alias("n_inter"))
-    )
-    jac = F.round(
-        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
-    )
-    return (
-        inter.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
 
 def jaccard_pairs_lsh(
     df: DataFrame,

@@ -1,13 +1,15 @@
-"""Text-analysis functions for large-scale training-data pipelines.
+"""Text-analysis expression builders for training-data pipelines.
 
-All hot-path functions are pure Spark Column expressions (JVM-side,
-whole-stage-codegen'd — no Python crossing), built so an equivalent ANSI-SQL
-form exists for the DuckDB oracle:
+Every Spark-side builder returns Spark-SQL text for ``selectExpr`` or
+``F.expr``: the JVM parses the whole expression in one py4j round trip and
+runs it whole-stage-codegen'd, with no Python crossing. ``*_expr`` builders
+are Spark SQL; ``*_sql`` builders spell the same computation for the DuckDB
+oracle. Column names passed to a builder are backtick-quoted (``ident``).
 
-- token counting (whitespace split)
-- occurrence counting via the replace trick (portable across engines)
-- language ID: stopword-frequency heuristic over a fixed marker table
-- quality scoring: length/word-length/punctuation/stopword ratios
+- tokens and token counting (whitespace split)
+- language ID: marker-word counts via the replace trick, then an argmax
+  CASE cascade
+- quality features: mean word length and punctuation ratio
 - document fingerprinting: md5 over alnum-normalized text
 
 Reference counterpart: crusty-core has no text analytics (it stops at link
@@ -16,9 +18,6 @@ expected to provide over the ``documents``/``pages.text`` columns.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 #: language → marker words (space-padded matching over ' '||text||' ').
 #: Deterministic, tiny, SQL-expressible — not a real langid model, but the
@@ -30,48 +29,34 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "es": ("el", "los", "que", "y"),
 }
 
-STOPWORDS_EN = ("the", "a", "and", "of", "to", "in", "is", "it")
+
+def ident(name: str) -> str:
+    """Backtick-quote a column reference for SQL text, one quoted part per
+    dot-separated part: ``a.embedding`` stays a qualified reference (as
+    ``F.col`` reads it), and a name holding a space or a reserved word
+    parses as one identifier."""
+    return ".".join("`%s`" % p.replace("`", "``") for p in name.split("."))
 
 
-def tokens(col: Column) -> Column:
-    """Whitespace tokens; empty string → empty array."""
-    t = F.trim(col)
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
+def tokens_expr(col: str) -> str:
+    """Whitespace tokens; empty or whitespace-only text → empty array."""
+    c = ident(col)
+    return (
+        f"CASE WHEN length(trim({c})) = 0 "
+        f"THEN cast(array() as array<string>) "
+        f"ELSE split(trim({c}), '\\\\s+') END"
     )
 
 
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col)).cast("int")
-
-
-def occurrences(col: Column, term: str) -> Column:
-    """Count of non-overlapping occurrences of ``term`` (replace trick —
-    identical semantics in Spark and DuckDB SQL)."""
-    return (
-        (F.length(col) - F.length(F.replace(col, F.lit(term))))
-        / F.lit(len(term))
-    ).cast("long")
-
-
-def _padded(col: Column) -> Column:
-    return F.concat(F.lit(" "), F.lower(col), F.lit(" "))
-
-
-def lang_score(col: Column, lang: str) -> Column:
-    """Marker-word hits per language over space-padded lowercase text."""
-    p = _padded(col)
-    s = F.lit(0).cast("long")
-    for w in LANG_MARKERS[lang]:
-        s = s + occurrences(p, f" {w} ")
-    return s
+def token_count_expr(col: str) -> str:
+    return f"CAST(size({tokens_expr(col)}) AS INT)"
 
 
 def lang_score_expr(col: str, lang: str) -> str:
-    """Spark-SQL twin of lang_score (same padded-replace-count tree), for
-    F.expr()/selectExpr() call sites: one JVM parse instead of ~40 py4j
-    round trips per language (see dedup_fns' *_expr note)."""
-    p = f"concat(' ', lower({col}), ' ')"
+    """Marker-word hits per language over space-padded lowercase text: each
+    term's non-overlapping occurrences by the replace trick (identical
+    semantics in Spark and DuckDB SQL)."""
+    p = f"concat(' ', lower({ident(col)}), ' ')"
     parts = ["CAST(0 AS BIGINT)"]
     for w in LANG_MARKERS[lang]:
         term = f" {w} "
@@ -83,53 +68,28 @@ def lang_score_expr(col: str, lang: str) -> str:
 
 
 def lang_id_from_scores_expr(scores: dict[str, str]) -> str:
-    """Spark-SQL twin of lang_id_from_scores over score column NAMES."""
+    """argmax CASE cascade over precomputed per-language score COLUMNS;
+    ties go to the lower language code, all-zero → 'und'. Staging the
+    scores behind an exchange boundary computes each score ONCE (the
+    inlined cascade re-evaluates every score up to ~5x) and shrinks the
+    Catalyst expression tree accordingly."""
+    s = {lang: ident(c) for lang, c in scores.items()}
     cases = []
     for lang in sorted(LANG_MARKERS):
         conds = ["true"]
         for other in sorted(LANG_MARKERS):
             if other < lang:
-                conds.append(f"({scores[lang]} > {scores[other]})")
+                conds.append(f"({s[lang]} > {s[other]})")
             elif other > lang:
-                conds.append(f"({scores[lang]} >= {scores[other]})")
-        conds.append(f"({scores[lang]} > 0)")
+                conds.append(f"({s[lang]} >= {s[other]})")
+        conds.append(f"({s[lang]} > 0)")
         cases.append(f"WHEN {' AND '.join(conds)} THEN '{lang}'")
     return "CASE " + " ".join(cases) + " ELSE 'und' END"
 
 
-def lang_id_from_scores(scores: dict[str, Column]) -> Column:
-    """argmax CASE cascade over precomputed per-language score columns.
-    Staging the scores behind an exchange boundary computes each score ONCE
-    (the inlined cascade re-evaluates every score up to ~5x) and shrinks
-    the Catalyst expression tree accordingly."""
-    expr = None
-    for lang in sorted(LANG_MARKERS):
-        cond = F.lit(True)
-        for other in sorted(LANG_MARKERS):
-            if other < lang:
-                cond = cond & (scores[lang] > scores[other])
-            elif other > lang:
-                cond = cond & (scores[lang] >= scores[other])
-        cond = cond & (scores[lang] > 0)
-        expr = (
-            F.when(cond, F.lit(lang))
-            if expr is None
-            else expr.when(cond, F.lit(lang))
-        )
-    return expr.otherwise(F.lit("und"))
-
-
-def lang_id(col: Column) -> Column:
-    """argmax over lang_score; ties broken by language code order; all-zero →
-    'und'. Expressed as a deterministic CASE cascade (portable)."""
-    return lang_id_from_scores(
-        {lang: lang_score(col, lang) for lang in sorted(LANG_MARKERS)}
-    )
-
-
 def lang_id_sql(col: str = "text") -> str:
-    """The DuckDB-side twin of lang_id(); kept adjacent so they evolve
-    together."""
+    """The DuckDB spelling of lang_score_expr + lang_id_from_scores_expr
+    (scores inlined); kept adjacent so they evolve together."""
     pad = f"(' ' || lower({col}) || ' ')"
 
     def occ(term: str) -> str:
@@ -155,43 +115,23 @@ def lang_id_sql(col: str = "text") -> str:
     return "CASE " + " ".join(cases) + " ELSE 'und' END"
 
 
-def punct_ratio(col: Column) -> Column:
-    stripped = F.regexp_replace(col, r"[a-zA-Z0-9\s]", "")
-    return F.when(F.length(col) > 0, F.length(stripped) / F.length(col)).otherwise(
-        F.lit(0.0)
+def punct_ratio_expr(col: str) -> str:
+    c = ident(col)
+    return (
+        f"CASE WHEN length({c}) > 0 THEN length(regexp_replace({c}, "
+        f"'[a-zA-Z0-9\\\\s]', '')) / length({c}) ELSE 0.0D END"
     )
 
 
-def stopword_ratio(col: Column) -> Column:
-    p = _padded(col)
-    hits = F.lit(0).cast("long")
-    for w in STOPWORDS_EN:
-        hits = hits + occurrences(p, f" {w} ")
-    n = token_count(col)
-    return F.when(n > 0, hits / n).otherwise(F.lit(0.0))
-
-
-def avg_word_len(col: Column) -> Column:
-    n = token_count(col)
-    chars = F.length(F.regexp_replace(F.trim(col), r"\s+", ""))
-    return F.when(n > 0, chars / n).otherwise(F.lit(0.0))
-
-
-def quality_score(col: Column) -> Column:
-    """Composite [0,1]-ish quality heuristic: rewards mid-length docs with
-    normal word lengths and some stopwords, penalizes punctuation soup."""
-    n = token_count(col)
-    len_term = F.least(n / F.lit(200.0), F.lit(1.0))
-    wl = avg_word_len(col)
-    wl_term = F.when((wl >= 3) & (wl <= 10), F.lit(1.0)).otherwise(F.lit(0.3))
-    sw_term = F.least(stopword_ratio(col) * 4, F.lit(1.0))
-    punct_term = F.lit(1.0) - F.least(punct_ratio(col) * 5, F.lit(1.0))
-    return F.round(
-        0.3 * len_term + 0.25 * wl_term + 0.25 * sw_term + 0.2 * punct_term, 6
+def avg_word_len_expr(col: str) -> str:
+    n = token_count_expr(col)
+    return (
+        f"CASE WHEN {n} > 0 THEN length(regexp_replace(trim({ident(col)}), "
+        f"'\\\\s+', '')) / {n} ELSE 0.0D END"
     )
 
 
-def fingerprint(col: Column) -> Column:
+def fingerprint_expr(col: str) -> str:
     """Stable content fingerprint: md5 of lowercased text with everything
     except [a-z0-9] removed (whitespace/punct-insensitive exact dedup key)."""
-    return F.md5(F.regexp_replace(F.lower(col), r"[^a-z0-9]", ""))
+    return f"md5(regexp_replace(lower({ident(col)}), '[^a-z0-9]', ''))"

@@ -1,8 +1,13 @@
 """Embedding-vector operations: cosine similarity + brute-force ANN top-k.
 
-Spark side uses JVM higher-order functions (zip_with + aggregate) over
-``array<float>`` cast to double — no Python crossing. The oracle twin uses
-the same double-precision elementwise computation.
+The Spark-side scores are Spark-SQL text (``*_expr``) over JVM higher-order
+functions (zip_with + aggregate) on ``array<float>`` cast to double — no
+Python crossing, and one py4j round trip to parse where the Column API paid
+one callback per lambda (building q33's tree that way cost ~1 s of driver
+time). The oracle's DuckDB spelling (``entry_queries._cos_sql``) uses the
+same double-precision elementwise computation. Column names passed to a
+builder are backtick-quoted (``text.ident``), so ``a.embedding`` stays a
+qualified reference.
 
 Scale path: brute-force top-k is the correctness baseline (O(Q×N) with a
 window rank). For corpus-scale ANN, ``ivf_assign`` buckets vectors by
@@ -12,69 +17,39 @@ IVF-flat layout expressed as a plain equi-join).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+from crusty_core_spark.functions.text import ident
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def _cosine_hoisted(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """cosine with the per-side norms precomputed BEFORE the pair join —
-    identical arithmetic (dot / (norm_a * norm_b), same double order), but
-    each side's norm is evaluated once per row instead of once per PAIR.
-    The higher-order-function norms evaluate interpreted, so hoisting them
-    off the joined cardinality is ~3x the scoring stage."""
-    return _dot(a, b) / (na * nb)
-
-
-# ---- SQL-text twins (driver-side build cost) -------------------------
-#
-# Every higher-order-function lambda built through the Column API is its
-# own py4j callback dance; the ANN builders stack enough of them that
-# CONSTRUCTING q33's tree cost ~1 s of pure driver time. Each builder
-# below spells the IDENTICAL expression as Spark-SQL text parsed JVM-side
-# in one round trip (same cast placement, same fold order, same rounding —
-# `0.0D` is the parser's double literal, matching F.lit(0.0)). Pinned
-# against the Column versions by tests/test_expr_twins.py.
-
-
-def _norm_sql(c: str) -> str:
+def _norm_expr(c: str) -> str:
     return (
-        f"sqrt(aggregate(transform({c}, x -> CAST(x AS DOUBLE) * "
+        f"sqrt(aggregate(transform({ident(c)}, x -> CAST(x AS DOUBLE) * "
         f"CAST(x AS DOUBLE)), 0.0D, (acc, v) -> acc + v))"
     )
 
 
-def _dot_sql(a: str, b: str) -> str:
+def _dot_expr(a: str, b: str) -> str:
     return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
-        f"CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
+        f"aggregate(zip_with({ident(a)}, {ident(b)}, (x, y) -> "
+        f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
     )
 
 
-def _cos_hoisted_sql(a: str, b: str, na: str, nb: str) -> str:
-    return f"round({_dot_sql(a, b)} / ({na} * {nb}), 6)"
+def cosine_expr(a: str, b: str) -> str:
+    return f"{_dot_expr(a, b)} / ({_norm_expr(a)} * {_norm_expr(b)})"
+
+
+def _cos_hoisted_expr(a: str, b: str, na: str, nb: str) -> str:
+    """cosine rounded to 6 decimals, with the per-side norms ``na``/``nb``
+    precomputed BEFORE the pair join — identical arithmetic (dot /
+    (norm_a * norm_b), same double order), but each side's norm is
+    evaluated once per row instead of once per PAIR. The higher-order
+    norms evaluate interpreted, so hoisting them off the joined
+    cardinality is ~3x the scoring stage."""
+    return f"round({_dot_expr(a, b)} / ({ident(na)} * {ident(nb)}), 6)"
 
 
 def brute_force_topk(
@@ -103,7 +78,7 @@ def brute_force_topk(
     ``None``, the size check runs; ``max_broadcast_queries`` of 0/None
     means "never broadcast" (guard disabled entirely, no count either).
     """
-    q = queries.withColumn("_nq", F.expr(_norm_sql("qvec")))
+    q = queries.withColumn("_nq", F.expr(_norm_expr("qvec")))
     if broadcast_queries is True:
         q = F.broadcast(q)
     elif broadcast_queries is None and max_broadcast_queries and (
@@ -112,13 +87,13 @@ def brute_force_topk(
     ):
         q = F.broadcast(q)
     scored = (
-        vectors.withColumn("_nv", F.expr(_norm_sql(vec_col)))
+        vectors.withColumn("_nv", F.expr(_norm_expr(vec_col)))
         .join(q)
         .filter(F.col(id_col) != F.col("query_id"))
         .selectExpr(
             "query_id",
-            f"{id_col} AS neighbor_id",
-            f"{_cos_hoisted_sql(vec_col, 'qvec', '_nv', '_nq')} AS cos",
+            f"{ident(id_col)} AS neighbor_id",
+            f"{_cos_hoisted_expr(vec_col, 'qvec', '_nv', '_nq')} AS cos",
         )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -141,14 +116,14 @@ def ivf_assign(
     Centroids are broadcast; assignment = argmax cosine via window rank
     partitioned on the row id (never on the vector array itself). The
     result's ``bucket`` column becomes the equi-join key for probes.
-    Norms are hoisted to each side of the join (see _cosine_hoisted)."""
-    scored = vectors.withColumn("_nv", F.expr(_norm_sql(vec_col))).join(
+    Norms are hoisted to each side of the join (see _cos_hoisted_expr)."""
+    scored = vectors.withColumn("_nv", F.expr(_norm_expr(vec_col))).join(
         F.broadcast(
-            centroids.withColumn("_nc", F.expr(_norm_sql(cent_col)))
+            centroids.withColumn("_nc", F.expr(_norm_expr(cent_col)))
         )
     ).selectExpr(
         "*",
-        f"{_cos_hoisted_sql(vec_col, cent_col, '_nv', '_nc')} AS _c",
+        f"{_cos_hoisted_expr(vec_col, cent_col, '_nv', '_nc')} AS _c",
     )
     w = W.partitionBy(id_col).orderBy(F.desc("_c"), F.asc("centroid_id"))
     return (
@@ -176,16 +151,16 @@ def ivf_probe_topk(
     (query_id, qvec)."""
     assigned = ivf_assign(vectors, centroids, vec_col, "cvec", id_col)
     q_assigned = ivf_probe_assign(queries, centroids).withColumn(
-        "_nq", F.expr(_norm_sql("qvec"))
+        "_nq", F.expr(_norm_expr("qvec"))
     )
     scored = (
-        assigned.withColumn("_nv", F.expr(_norm_sql(vec_col)))
+        assigned.withColumn("_nv", F.expr(_norm_expr(vec_col)))
         .join(F.broadcast(q_assigned), on="bucket")
         .filter(F.col(id_col) != F.col("query_id"))
         .selectExpr(
             "query_id",
-            f"{id_col} AS neighbor_id",
-            f"{_cos_hoisted_sql(vec_col, 'qvec', '_nv', '_nq')} AS cos",
+            f"{ident(id_col)} AS neighbor_id",
+            f"{_cos_hoisted_expr(vec_col, 'qvec', '_nv', '_nq')} AS cos",
         )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -198,11 +173,11 @@ def ivf_probe_topk(
 
 def ivf_probe_assign(queries: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid assignment for the (small) query side."""
-    scored = queries.withColumn("_nq", F.expr(_norm_sql("qvec"))).join(
-        F.broadcast(centroids.withColumn("_nc", F.expr(_norm_sql("cvec"))))
+    scored = queries.withColumn("_nq", F.expr(_norm_expr("qvec"))).join(
+        F.broadcast(centroids.withColumn("_nc", F.expr(_norm_expr("cvec"))))
     ).selectExpr(
         "*",
-        f"{_cos_hoisted_sql('qvec', 'cvec', '_nq', '_nc')} AS _c",
+        f"{_cos_hoisted_expr('qvec', 'cvec', '_nq', '_nc')} AS _c",
     )
     w = W.partitionBy("query_id").orderBy(F.desc("_c"), F.asc("centroid_id"))
     return (

@@ -11,7 +11,8 @@ contract on the Python stdlib so a live crawl is a one-liner::
     eng = CrawlEngine(spark, pages=None, workdir, cfg)   # default client
     # or explicitly: CrawlEngine(..., fetcher=UrllibFetcher(cfg))
 
-It satisfies the engine's fetcher contract (plans/engine._fetch_stage):
+It satisfies the engine's fetcher contract (``fetch_merge`` below, which
+both crawl paths call):
 ``fetcher(urls: list[str]) -> pandas.DataFrame`` with columns
 ``(url, html, status, location, content_type, content_encoding)``; urls
 absent from the result are fetch failures (the engine records
@@ -55,6 +56,66 @@ import urllib.error
 import urllib.request
 
 _CHUNK = 64 * 1024
+
+#: the response columns a fetcher returns besides ``url``
+RESPONSE_COLS = ["html", "status", "location", "content_type",
+                 "content_encoding"]
+
+
+def fetch_merge(pdf, fetcher, deadline_s: float | None = None,
+                exempt=frozenset()):
+    """Point-fetch one batch of ready rows and left-merge the responses:
+    ``pdf`` (with ``url``, ``resolve_failed`` and ``target``) plus
+    ``RESPONSE_COLS``, in ``pdf``'s row order. The driver-local iteration
+    calls it on its ready frame, the distributed plan inside a
+    ``mapInPandas`` batch.
+
+    Each distinct URL is requested once. Resolve-failed rows never
+    connect and get no response data; JustResolveDNS tasks stop after
+    resolve (task_processor.rs:285-292). A URL the fetcher returns twice
+    keeps its first row, so the merge never multiplies rows (ADVICE r3).
+
+    With ``deadline_s`` (CrawlConfig.fetch_deadline_ms, fetchers with
+    ``supports_deadline``), URLs outside ``exempt`` fetch under that wall
+    deadline, and ``exempt`` ones (deferred last iteration) to their full
+    per-task timeouts, so a slow host still converges to a verdict. The
+    result then also carries a boolean ``fetch_deferred``."""
+    import pandas as pd
+
+    want = ~pdf["resolve_failed"].astype(bool) & (
+        pdf["target"] != "JustResolveDNS"
+    )
+    urls = sorted(set(pdf["url"][want].tolist()))
+    if deadline_s is None:
+        res = fetcher(urls) if urls else None
+    else:
+        normal = [u for u in urls if u not in exempt]
+        held = [u for u in urls if u in exempt]
+        frames = []
+        if normal:
+            frames.append(fetcher(normal, deadline_s=deadline_s))
+        if held:
+            frames.append(fetcher(held))
+        res = pd.concat(frames, ignore_index=True) if frames else None
+    if res is None or not len(res):
+        res = pd.DataFrame(columns=["url", *RESPONSE_COLS])
+    res = res.drop_duplicates(subset=["url"], keep="first")
+    for c in RESPONSE_COLS:
+        if c not in res.columns:
+            res[c] = None
+    merge_cols = ["url", *RESPONSE_COLS]
+    if deadline_s is not None:
+        if "deferred" not in res.columns:
+            res["deferred"] = False
+        merge_cols.append("deferred")
+    out = pdf.merge(res[merge_cols], on="url", how="left")
+    if deadline_s is not None:
+        out = out.rename(columns={"deferred": "fetch_deferred"})
+        out["fetch_deferred"] = out["fetch_deferred"].fillna(False).astype(bool)
+    failed = out["resolve_failed"].astype(bool)
+    if failed.any():
+        out.loc[failed, RESPONSE_COLS] = None
+    return out
 
 
 class _NoRedirect(urllib.request.HTTPRedirectHandler):

@@ -22,7 +22,7 @@ from __future__ import annotations
 import ipaddress
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -78,6 +78,25 @@ def usable_addrs_udf(extra_cidrs: tuple[str, ...] = ()):
 _RESOLVER_CACHE: dict = {}
 
 
+def resolve_failed_flags(hosts, resolver, cache: dict,
+                         nets: list | None = None) -> list[bool]:
+    """Per-row ``resolve_failed`` through a point ``resolver``: each host
+    (lowered, trimmed) not yet in ``cache`` is resolved once and cached as
+    has-usable-address. Resolution fails when the resolver raises, returns
+    nothing, or every address is in a reserved or ``nets`` subnet. Both
+    crawl paths fill their resolver cache through here."""
+    norm = [str(h or "").strip().lower() for h in hosts]
+    for h in set(norm) - cache.keys():
+        try:
+            addrs = resolver(h)
+        except Exception:
+            addrs = None
+        cache[h] = bool(addrs) and any(
+            not ip_blacklisted(a, nets) for a in addrs
+        )
+    return [not cache[h] for h in norm]
+
+
 def resolver_stage(
     ready: DataFrame,
     resolver,
@@ -128,19 +147,9 @@ def resolver_stage(
         nets = [ipaddress.ip_network(c) for c in extra]
         cache = _RESOLVER_CACHE.setdefault(rkey, {})
         for pdf in it:
-            hosts_norm = [
-                str(h or "").strip().lower() for h in pdf[host_col]
-            ]
-            for h in set(hosts_norm) - cache.keys():
-                try:
-                    addrs = resolver(h)
-                except Exception:
-                    addrs = None
-                cache[h] = bool(addrs) and any(
-                    not ip_blacklisted(a, nets) for a in addrs
-                )
-            pdf = pdf.copy()
-            pdf["resolve_failed"] = [not cache[h] for h in hosts_norm]
+            pdf["resolve_failed"] = resolve_failed_flags(
+                pdf[host_col], resolver, cache, nets
+            )
             yield pdf[cols]
 
     return ready.mapInPandas(batches, schema=schema)

@@ -118,8 +118,8 @@ class CrawlRulesBuilder:
         ``resolver(host) -> list[str]`` of addresses. Without a hosts dim
         table it runs inside the distributed plan as an Arrow-batched
         ``mapInPandas`` stage with a per-worker DNS cache
-        (operators/resolve.py resolver_stage); the driver-local path uses a
-        driver-side cache with identical semantics."""
+        (operators/resolve.py resolver_stage); the driver-local path runs
+        the same ``resolve_failed_flags`` kernel over a driver-side cache."""
         self._resolver = resolver
         return self
 

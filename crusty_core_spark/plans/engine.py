@@ -60,6 +60,7 @@ from crusty_core_spark.operators.chain_stage import (
     _STATE_COLS,
     run_chain_stage,
 )
+from crusty_core_spark.operators.filters import apply_fetch_filters
 from crusty_core_spark.plans import schemas as S
 from crusty_core_spark.sources.tables import TableIO
 
@@ -233,7 +234,8 @@ class CrawlEngine:
         #: ``resolver(host) -> list[str]`` addresses. Used when no hosts dim
         #: table is given — runs as the Arrow-batched resolver_stage with a
         #: per-worker DNS cache (operators/resolve.py); the driver-local path
-        #: keeps its own driver-side cache. Must be cloudpickle-able.
+        #: runs the same kernel over ``_resolver_cache``. Must be
+        #: cloudpickle-able.
         self.resolver = resolver
         # stable per-engine cache identity for the resolver's per-worker DNS
         # cache: two engines in one Spark session with different resolvers/
@@ -241,6 +243,7 @@ class CrawlEngine:
         import uuid as _uuid
 
         self._resolver_key = _uuid.uuid4().hex if resolver is not None else None
+        self._resolver_cache: dict = {}
         # fork + warm the local-path worker pool at construction — the
         # one-time fork/COW/import cost is setup (like JVM startup), never
         # part of a crawl iteration
@@ -276,10 +279,11 @@ class CrawlEngine:
 
         - F: a thin (96-row) probe with the SHAPE of a real iteration —
           window rank, equi-join, an Arrow ``mapInPandas`` crossing, a
-          cogroup ``applyInPandas``, a parquet write (min of 2 after a
-          warmup). The earlier toy probe (2-stage shuffle × 8 jobs) was
-          blind to AQE re-planning and python-worker scheduling and
-          under-read the floor.
+          cogroup ``applyInPandas``, run through the ``noop`` sink (min
+          of 2 after a warmup). It writes no files, and a real distributed
+          iteration's driver collect and commit are not in it. The earlier
+          toy probe (2-stage shuffle × 8 jobs) was blind to AQE re-planning
+          and python-worker scheduling and under-read the floor.
         - D: the same pipeline over 4 096 rows carrying ~3 KB html
           through the REAL extract kernel inside ``mapInPandas``; its
           per-row rate is (4096 - 96) / (t_mid - F). On a multi-executor
@@ -1180,21 +1184,22 @@ class CrawlEngine:
           runs as an Arrow-batched ``mapInPandas`` stage — every executor
           partition fetches its own ready URLs (the reference's per-task
           HTTP fetch re-expressed as a vectorized stage; client factory
-          crawler.rs:189-245). Resolve-failed rows never reach the client.
+          crawler.rs:189-245) through operators.fetcher.fetch_merge, the
+          kernel the driver-local path calls directly. Resolve-failed rows
+          never reach the client.
         """
         if self.pages is not None:
             return ready.join(self.pages, on="url", how="left")
 
-        import pandas as pd
         from pyspark.sql import types as PT
+
+        from crusty_core_spark.operators.fetcher import fetch_merge
 
         fetcher = self.fetcher
         # straggler tolerance (CrawlConfig.fetch_deadline_ms): a wall
         # deadline per batch, deferred URLs re-queued by step(). URLs
         # deferred LAST iteration (carried in the manifest state) are
-        # exempt this iteration — they fetch to their full per-task
-        # timeouts, so a persistently slow host still converges to a
-        # definite verdict instead of deferring forever.
+        # exempt this iteration (see fetch_merge).
         deadline_s = None
         exempt: set = set()
         if self.cfg.fetch_deadline_ms and getattr(
@@ -1210,67 +1215,15 @@ class CrawlEngine:
         )
         if deadline_s is not None:
             page_ddl += ", fetch_deferred boolean"
-        page_fields = PT.StructType.fromDDL(page_ddl)
         out_schema = PT.StructType(
-            list(ready.schema.fields) + list(page_fields.fields)
+            list(ready.schema.fields)
+            + list(PT.StructType.fromDDL(page_ddl).fields)
         )
         cols = [f.name for f in out_schema.fields]
-        page_cols = [f.name for f in page_fields.fields
-                     if f.name != "fetch_deferred"]
 
         def fetch_batches(batches):
             for pdf in batches:
-                # JustResolveDNS tasks stop after resolve — the reference
-                # never issues an HTTP request for them
-                # (task_processor.rs:285-292); resolve-failed rows never
-                # connected (ADVICE r3)
-                urls = sorted(
-                    {
-                        u
-                        for u, rf, tg in zip(
-                            pdf["url"], pdf["resolve_failed"], pdf["target"]
-                        )
-                        if not rf and tg != "JustResolveDNS"
-                    }
-                )
-                if deadline_s is None:
-                    res = fetcher(urls) if urls else None
-                else:
-                    frames = []
-                    normal = [u for u in urls if u not in exempt]
-                    held = [u for u in urls if u in exempt]
-                    if normal:
-                        frames.append(fetcher(normal, deadline_s=deadline_s))
-                    if held:  # deadline-exempt: full per-task timeouts
-                        frames.append(fetcher(held))
-                    res = (
-                        pd.concat(frames, ignore_index=True)
-                        if frames else None
-                    )
-                if res is None or not len(res):
-                    res = pd.DataFrame(columns=["url", *page_cols])
-                # a fetcher returning duplicate urls would multiply rows
-                # through the left merge below — keep the first (ADVICE r3)
-                res = res.copy().drop_duplicates(subset=["url"], keep="first")
-                for c in page_cols:
-                    if c not in res.columns:
-                        res[c] = None
-                if deadline_s is not None and "deferred" not in res.columns:
-                    res["deferred"] = False
-                merge_cols = ["url", *page_cols] + (
-                    ["deferred"] if deadline_s is not None else []
-                )
-                out = pdf.merge(res[merge_cols], on="url", how="left")
-                if deadline_s is not None:
-                    out = out.rename(columns={"deferred": "fetch_deferred"})
-                    out["fetch_deferred"] = (
-                        out["fetch_deferred"].fillna(False).astype(bool)
-                    )
-                # resolve-failed rows never connected — no page data
-                failed = out["resolve_failed"].astype(bool)
-                if failed.any():
-                    out.loc[failed, page_cols] = None
-                yield out[cols]
+                yield fetch_merge(pdf, fetcher, deadline_s, exempt)[cols]
 
         return ready.mapInPandas(fetch_batches, schema=out_schema)
 
@@ -1303,51 +1256,18 @@ class CrawlEngine:
         load_filters.rs:8-19): custom status filters run after the built-in
         Redirect/ContentType (so only on rows those accepted); custom load
         filters run after the body loaded (action == processed), before
-        parse. A filter returning a "term:X"/"error:X" string overrides the
-        action; None/"accept" passes; filter errors are non-fatal. Only paid
-        when filters are registered (one extra Arrow crossing)."""
+        parse. Both paths run operators.filters.apply_fetch_filters; here
+        it costs one extra Arrow crossing, paid only when filters are
+        registered."""
         sf = self.custom_status_filters
         lf = self.custom_load_filters
-        from crusty_core_spark.functions.extract import decode_body
-
-        schema = fetched.schema
-        cols = [f.name for f in schema.fields]
 
         def apply(batches):
             for pdf in batches:
-                out_actions = []
-                for r in pdf.itertuples(index=False):
-                    a = r.action
-                    if sf and a in ("processed", "head",
-                                    "error:HttpTooBigResponse"):
-                        for f in sf:
-                            try:
-                                v = f(r.status, r.content_type, r.url, r.depth)
-                            except Exception:
-                                continue
-                            if isinstance(v, str) and v not in ("accept",):
-                                a = v
-                                break
-                    if lf and a == "processed" and int(r.marker) != 1:
-                        body = decode_body(
-                            bytes(r.html) if r.html is not None else b"",
-                            r.content_encoding,
-                        )
-                        for f in lf:
-                            try:
-                                v = f(r.status, r.content_type, body, r.url,
-                                      r.depth)
-                            except Exception:
-                                continue
-                            if isinstance(v, str) and v not in ("accept",):
-                                a = v
-                                break
-                    out_actions.append(a)
-                pdf = pdf.copy()
-                pdf["action"] = out_actions
-                yield pdf[cols]
+                pdf["action"] = apply_fetch_filters(pdf, pdf["action"], sf, lf)
+                yield pdf
 
-        return fetched.mapInPandas(apply, schema=schema)
+        return fetched.mapInPandas(apply, schema=fetched.schema)
 
     # ----------------------------------------------------------- run/readers
 

@@ -16,9 +16,12 @@ distributed plan runs inside its Arrow stages:
 - politeness ready-selection: pandas stable sort + cumcount == the window
   rank (plans/engine.py step);
 - resolve + fetch: ONE small Spark job — ``resolve_ready`` (the same
-  operator) + broadcast join against the pages table, collected;
-- status/load classification: a pure-python mirror of the engine's bulk
-  masks (the simulator pins both via the parity suite);
+  operator) + broadcast join against the pages table, collected; with a
+  point-fetch client instead, no Spark job: the ``resolve_failed_flags``
+  and ``fetch_merge`` kernels the distributed ``mapInPandas`` stages run;
+- status classification: a numpy mirror of the engine's bulk masks (the
+  simulator pins both via the parity suite); custom status/load filters:
+  ``operators.filters.apply_fetch_filters``, the distributed kernel;
 - parse/expand/canonicalize: ``functions.extract._extract_batches`` — the
   exact generator the distributed ``mapInPandas`` runs;
 - Bloom dedup: ``functions.xxh64`` (bit-exact python twin of F.xxhash64)
@@ -43,7 +46,7 @@ from urllib.parse import urlsplit
 import pandas as pd
 
 from crusty_core_spark.functions.canonicalize import canonicalize_url
-from crusty_core_spark.functions.extract import _extract_batches, decode_body
+from crusty_core_spark.functions.extract import _extract_batches
 from crusty_core_spark.functions.xxh64 import bloom_positions, bloom_shard_id
 from crusty_core_spark.operators import bloom
 from crusty_core_spark.operators.chain import FOLLOW_TARGETS
@@ -51,6 +54,10 @@ from crusty_core_spark.operators.chain_stage import (
     N_JOB_BUCKETS,
     _STATE_COLS,
     make_chain_fn,
+)
+from crusty_core_spark.operators.filters import (
+    _str_or_none,
+    apply_fetch_filters,
 )
 from crusty_core_spark.plans import schemas as S
 
@@ -450,29 +457,6 @@ def _hosts_usable_map(engine) -> dict[str, bool]:
     return m
 
 
-def _resolver_usable(engine, hosts_series) -> dict[str, bool]:
-    """host → has-usable-address via the registered point resolver — the
-    driver-side twin of operators.resolve.resolver_stage (same blacklist,
-    same failure semantics), with a per-engine cache so a host is resolved
-    once per crawl."""
-    from crusty_core_spark.operators.resolve import ip_blacklisted
-
-    cache = getattr(engine, "_resolver_usable_cache", None)
-    if cache is None:
-        cache = engine._resolver_usable_cache = {}
-    for h in {str(x or "").strip().lower() for x in hosts_series}:
-        if h in cache:
-            continue
-        try:
-            addrs = engine.resolver(h)
-        except Exception:
-            addrs = None
-        cache[h] = bool(addrs) and any(
-            not ip_blacklisted(a) for a in addrs
-        )
-    return cache
-
-
 def _seen_key_chunks(io, shards: list[int]) -> dict[int, list]:
     """Per-shard url_seen membership keys as arrow string chunks
     (``"<job_id>|<url>"`` — job ids are digits-only, so the first ``|``
@@ -759,57 +743,38 @@ def _step_local_inner(engine, it: int) -> dict:
 
     # --- resolve + fetch: the ONE Spark job of a local iteration (the pages
     #     table is the scale-out side; the thin ready set broadcasts)
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from crusty_core_spark.operators.resolve import resolve_ready
+    from crusty_core_spark.operators.fetcher import RESPONSE_COLS, fetch_merge
+    from crusty_core_spark.operators.resolve import (
+        resolve_failed_flags,
+        resolve_ready,
+    )
 
-    fetch_cols = _FRONTIER_COLS + [
-        "resolve_failed", "html", "status", "location", "content_type",
-        "content_encoding",
-    ]
-    page_cols = ("html", "status", "location", "content_type",
-                 "content_encoding")
+    fetch_cols = _FRONTIER_COLS + ["resolve_failed", *RESPONSE_COLS]
     if engine.fetcher is not None and (
         engine.hosts is None or engine.pages is None
     ):
         # point-fetch client: O(ready) lookups, zero Spark jobs (the
-        # reference's HTTP fetch is exactly this shape). With a hosts dim,
-        # resolution runs against a driver-cached usable-host map (the
-        # python twin of operators.resolve.resolve_ready).
+        # reference's HTTP fetch is exactly this shape) — the same resolve
+        # and fetch kernels the distributed plan runs in its mapInPandas.
+        # With a hosts dim, resolution runs against a driver-cached
+        # usable-host map (the python twin of resolve_ready's join).
         if engine.hosts is not None:
             usable = _hosts_usable_map(engine)
-            rf = ~ready["host"].map(
-                lambda h: usable.get(str(h or "").strip().lower(), False)
-            )
+            rf = [
+                not usable.get(str(h or "").strip().lower(), False)
+                for h in ready["host"]
+            ]
         elif engine.resolver is not None:
-            usable = _resolver_usable(engine, ready["host"])
-            rf = ~ready["host"].map(
-                lambda h: usable[str(h or "").strip().lower()]
+            rf = resolve_failed_flags(
+                ready["host"], engine.resolver, engine._resolver_cache
             )
         else:
-            rf = pd.Series(False, index=ready.index)
-        # JustResolveDNS tasks stop after resolve — no HTTP request
-        # (task_processor.rs:285-292), mirroring the distributed
-        # _fetch_stage (ADVICE r3)
-        want = ~rf & (ready["target"] != "JustResolveDNS")
-        fetch_urls = sorted(set(ready["url"][want].tolist()))
-        pages_pd = engine.fetcher(fetch_urls) if fetch_urls else None
-        if pages_pd is None or not len(pages_pd):
-            pages_pd = pd.DataFrame(columns=["url", *page_cols])
-        # duplicate urls from the fetcher would multiply rows via the merge
-        pages_pd = pages_pd.copy().drop_duplicates(subset=["url"], keep="first")
-        for c in page_cols:
-            if c not in pages_pd.columns:
-                pages_pd[c] = None
-        fetched = ready.merge(
-            pages_pd[["url", *page_cols]], on="url", how="left"
-        )
-        fetched["resolve_failed"] = rf.to_numpy()
-        failed = fetched["resolve_failed"].astype(bool)
-        if failed.any():  # resolve-failed rows never connected
-            fetched.loc[failed, list(page_cols)] = None
-        fetched = fetched[fetch_cols]
+            rf = False
+        fetched = fetch_merge(
+            ready.assign(resolve_failed=rf), engine.fetcher
+        )[fetch_cols]
     else:
         # pandas promotes int columns to float when they ever met a NaN
         # (e.g. via concat with empty frames) — coerce back to the frontier
@@ -860,9 +825,6 @@ def _step_local_inner(engine, it: int) -> dict:
     )
     has_status = ~np.isnan(status_f)
 
-    def _str_or_none(v):
-        return v if isinstance(v, str) else None
-
     def _as_bytes(h):
         if isinstance(h, bytes):
             return h
@@ -904,40 +866,14 @@ def _step_local_inner(engine, it: int) -> dict:
     action[target_a == "JustResolveDNS"] = "resolved"
     action[rf_a] = "error:ResolveError"
 
-    # custom status/load filters: per-row over the affected subset only
-    # (same sequence as engine._apply_custom_fetch_filters — status
-    # filters first, then load filters against the post-status action)
-    if engine.custom_status_filters:
-        for i in np.flatnonzero(
-            np.isin(action, ("processed", "head", "error:HttpTooBigResponse"))
-        ):
-            for f in engine.custom_status_filters:
-                try:
-                    v = f(
-                        None if not has_status[i] else int(status_f[i]),
-                        ct_list[i], url_a[i], int(depth_a[i]),
-                    )
-                except Exception:
-                    continue
-                if isinstance(v, str) and v != "accept":
-                    action[i] = v
-                    break
-    if engine.custom_load_filters:
-        for i in np.flatnonzero(
-            (action == "processed") & (marker_a != 1)
-        ):
-            body = decode_body(html_list[i] or b"", ce_list[i])
-            for f in engine.custom_load_filters:
-                try:
-                    v = f(
-                        None if not has_status[i] else int(status_f[i]),
-                        ct_list[i], body, url_a[i], int(depth_a[i]),
-                    )
-                except Exception:
-                    continue
-                if isinstance(v, str) and v != "accept":
-                    action[i] = v
-                    break
+    # custom status/load filters: the same kernel the distributed plan
+    # runs in its mapInPandas (status filters first, then load filters
+    # against the post-status action)
+    if engine.custom_status_filters or engine.custom_load_filters:
+        action = apply_fetch_filters(
+            fetched, action, engine.custom_status_filters,
+            engine.custom_load_filters,
+        )
     mark("classify")
 
     # --- parse + expand + canonicalize (the exact mapInPandas generator)

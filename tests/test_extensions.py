@@ -146,22 +146,99 @@ def test_user_extract_column_lands_in_fetch_log(spark, workdir):
     assert any(v is not None and v > 0 for v in log.values())
 
 
-def test_custom_status_and_load_filters_parity(spark, workdir):
-    """status_filters::Filter / load_filters::Filter extension points +
-    the built-in post-load ContentType (load_filters.rs:21-51)."""
-    sf = (status_code_range(200, 299, reason="Non2xx"),)
+def _custom_filters_parity(spark, workdir, cfg):
+    def status_echo(status, content_type, url, depth):
+        # the verdict embeds the status the filter got: a status handed
+        # over as 404.0 instead of 404 is a parity mismatch
+        if url.endswith("/robots.txt") or status is None or 200 <= status < 300:
+            return None
+        return f"term:S{status}"
+
+    def dangling(doc, task):
+        # links to pages the corpus lacks: null-status rows in the same
+        # fetch batches as the filtered ones
+        return [{"href": f"{task['url']}-missing{k}"} for k in range(2)]
+
+    sf = (status_echo,)
     lf = (load_content_type(("text/html",)),)  # robots text/plain exempt
-    cfg = CrawlConfig(page_budget=25)
     sim, eng = run_both(
         spark, workdir, cfg,
         custom_status_filters=sf, custom_load_filters=lf,
+        expanders=(X.follow_links, dangling),
     )
     assert_parity(sim, eng)
     actions = {
         r.action
         for r in eng.io.read("fetch_log").select("action").distinct().collect()
     }
-    assert "term:LoadContentType" in actions or "term:Non2xx" in actions
+    assert {"term:S404", "term:S503", "error:HttpError"} <= actions, actions
+    return eng
+
+
+def test_custom_status_and_load_filters_parity(spark, workdir):
+    """status_filters::Filter / load_filters::Filter extension points +
+    the built-in post-load ContentType (load_filters.rs:21-51), at the
+    default threshold (driver-local iterations)."""
+    _custom_filters_parity(spark, workdir, CrawlConfig(page_budget=25))
+
+
+def test_custom_status_and_load_filters_parity_distributed(spark, workdir):
+    """The same filters through the distributed plan's mapInPandas stage,
+    every iteration distributed. One shuffle partition puts each
+    iteration's rows in one Arrow batch, so null statuses share the batch
+    with the filtered rows: Spark hands that int column to pandas as
+    float64, and the filters must still get 404, not 404.0."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        eng = _custom_filters_parity(
+            spark, workdir,
+            CrawlConfig(page_budget=25, local_iter_threshold=0),
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert {r.exec_local for r in eng.flush_metrics().collect()} == {0}
+
+
+def test_fetch_filter_kernel_on_float_status():
+    """operators.filters.apply_fetch_filters over a float64-with-NaN status
+    column (Spark's pandas form of a nullable int): filters get int/None,
+    status filters touch only the rows the built-in filters accepted, and
+    load filters see the post-status action and skip robots rows."""
+    import numpy as np
+    import pandas as pd
+
+    from crusty_core_spark.operators.filters import apply_fetch_filters
+
+    seen = []
+
+    def sf(status, ctype, url, depth):
+        seen.append((url, status, ctype, depth))
+        return f"term:S{status}" if status != 200 else None
+
+    def lf(status, ctype, body, url, depth):
+        return "term:Body" if body == b"bad" else "accept"
+
+    pdf = pd.DataFrame({
+        "url": ["u0", "u1", "u2", "u3", "u4", "u5"],
+        "status": [200.0, 404.0, np.nan, 200.0, 200.0, 301.0],
+        "content_type": ["text/html", None, None, "text/html", "text/plain",
+                         "text/html"],
+        "depth": [0, 1, 2, 1, 0, 1],
+        "marker": [0, 0, 0, 0, 1, 0],
+        "html": [b"ok", b"x", None, b"bad", b"bad", b""],
+        "content_encoding": [None] * 6,
+    })
+    assert pdf["status"].dtype == np.float64
+    action = ["processed", "processed", "error:HttpError", "processed",
+              "processed", "term:Redirect"]
+    out = apply_fetch_filters(pdf, action, (sf,), (lf,))
+    assert list(out) == ["processed", "term:S404", "error:HttpError",
+                         "term:Body", "processed", "term:Redirect"]
+    assert seen == [("u0", 200, "text/html", 0), ("u1", 404, None, 1),
+                    ("u3", 200, "text/html", 1), ("u4", 200, "text/plain", 0)]
+    assert all(type(s) is int for _, s, _, _ in seen)
 
 
 def test_selective_task_filter_combinator(spark, workdir):

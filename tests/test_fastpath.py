@@ -184,58 +184,66 @@ def test_seed_local_vs_distributed(spark, workdir):
         (901, "ftp://files.example/x"),         # scheme-rejected by chain
         (902, "HTTP://Upper.Example:80/a#frag"),  # canonical != raw
     ]
-    for robots in (True, False):
-        for delay in (0, 500):
-            mk = lambda thr: CrawlConfig(  # noqa: E731
-                robots_txt=robots, delay_ms=delay, local_iter_threshold=thr
+    # every robots × politeness mode with the per-candidate sched log,
+    # plus one pass with the counts-only log (sched_count rows)
+    modes = [(r, d, True) for r in (True, False) for d in (0, 500)]
+    modes.append((True, 500, False))
+    for robots, delay, detail in modes:
+        mk = lambda thr: CrawlConfig(  # noqa: E731
+            robots_txt=robots, delay_ms=delay, local_iter_threshold=thr,
+            sched_log_detail=detail,
+        )
+        # thr=0 disables the local path entirely → distributed seed;
+        # the default-thr engine takes the local seed (10 seeds < 8*thr)
+        tag = f"{int(robots)}_{delay}_{int(detail)}"
+        eng_d = CrawlEngine(spark, pages_df(spark, rows),
+                            workdir + f"/d{tag}", mk(0))
+        eng_l = CrawlEngine(spark, pages_df(spark, rows),
+                            workdir + f"/l{tag}", mk(20000))
+        eng_d.seed(seeds)
+        eng_l.seed(seeds)
+
+        def snap(eng):
+            chain = sorted(
+                tuple(r)
+                for r in eng.io.read("chain")
+                .filter(F.col("row_kind") != "sched_count")
+                .select("row_kind", "job_id", "task_seq", "url", "host",
+                        "depth", "target", "marker", "action", "iter")
+                .collect()
             )
-            # thr=0 disables the local path entirely → distributed seed;
-            # the default-thr engine takes the local seed (10 seeds < 8*thr)
-            tag = f"{int(robots)}_{delay}"
-            eng_d = CrawlEngine(spark, pages_df(spark, rows),
-                                workdir + f"/d{tag}", mk(0))
-            eng_l = CrawlEngine(spark, pages_df(spark, rows),
-                                workdir + f"/l{tag}", mk(20000))
-            eng_d.seed(seeds)
-            eng_l.seed(seeds)
-
-            def snap(eng):
-                chain = sorted(
-                    tuple(r)
-                    for r in eng.io.read("chain")
-                    .filter(F.col("row_kind") != "sched_count")
-                    .select("row_kind", "job_id", "task_seq", "url", "host",
-                            "depth", "target", "marker", "action", "iter")
-                    .collect()
-                )
-                # per-action scheduling totals from the counts-only rows
-                ch = eng.io.read_local(
-                    "chain", ["row_kind", "action", "parent_seq_num"])
+            # per-action scheduling totals: one row per decision in detail
+            # mode, summed per-group counters in counts-only mode
+            ch = eng.io.read_local(
+                "chain", ["row_kind", "action", "parent_seq_num"])
+            if eng.cfg.sched_log_detail:
+                totals = ch[ch["row_kind"] == "sched"].groupby("action").size()
+            else:
                 sc = ch[ch["row_kind"] == "sched_count"]
-                sched_totals = sorted(
-                    sc.groupby("action")["parent_seq_num"].sum()
-                    .astype(int).items()
-                ) if not eng.cfg.sched_log_detail else None
-                seen = sorted(
-                    tuple(r) for r in eng.url_seen_df().collect()
-                )
-                states = sorted(
-                    tuple(r) for r in eng._job_state_df().collect()
-                )
-                job_log = sorted(
-                    tuple(r)
-                    for r in eng.job_log_df().select(
-                        "job_id", "iter", "reason", "budget_used"
-                    ).collect()
-                )
-                return (chain, sched_totals, seen, states, job_log,
-                        eng.pending_count(),
-                        tuple(eng.io.state.get("pending_buckets") or ()))
+                totals = sc.groupby("action")["parent_seq_num"].sum()
+            sched_totals = sorted(totals.astype(int).items())
+            seen = sorted(
+                tuple(r) for r in eng.url_seen_df().collect()
+            )
+            states = sorted(
+                tuple(r) for r in eng._job_state_df().collect()
+            )
+            job_log = sorted(
+                tuple(r)
+                for r in eng.job_log_df().select(
+                    "job_id", "iter", "reason", "budget_used"
+                ).collect()
+            )
+            return (chain, sched_totals, seen, states, job_log,
+                    eng.pending_count(),
+                    tuple(eng.io.state.get("pending_buckets") or ()))
 
-            assert snap(eng_d) == snap(eng_l), (robots, delay)
-            # both seeds checkpoint under the same label → resume works
-            # from either
-            assert "iter-000000" in eng_l.io.list_checkpoints()[-1]
+        snap_d = snap(eng_d)
+        assert snap_d[1], "no scheduling decisions were logged"
+        assert snap_d == snap(eng_l), (robots, delay, detail)
+        # both seeds checkpoint under the same label → resume works
+        # from either
+        assert "iter-000000" in eng_l.io.list_checkpoints()[-1]
 
     # full crawl after a LOCAL seed with distributed iterations must equal
     # the all-distributed crawl (seed cap sits above the step threshold)
