@@ -79,29 +79,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _t_par(spark: SparkSession, sf_dir: str, name: str, *keys: str) -> DataFrame:
-    """Read a table and, when its file layout caps scan parallelism (one
-    small single-row-group file = one scan task — the sandbox layout),
-    hash-repartition by ``keys`` so downstream per-row expression work runs
-    on every core instead of inside the lone scan task. Results are
-    identical (a deterministic hash repartition reorders rows only). At
-    production scale the files exceed the split size, the guard is false,
-    and NO extra exchange is added — this is scale-adaptive, not a
-    local-mode constant."""
-    import os
-
-    df = _t(spark, sf_dir, name)
-    path = f"{sf_dir}/{name}.parquet"
-    # a directory-backed table (real deployments) sizes itself via its
-    # splits — only a single small local FILE has the one-task pathology
-    if not os.path.isfile(path):
-        return df
-    if os.path.getsize(path) <= 64 * 1024 * 1024:
-        n = spark.sparkContext.defaultParallelism
-        df = df.repartition(n, *[F.col(k) for k in keys])
-    return df
-
-
 def _dec_sum(col, scale: int = 4):
     """Order-independent double sum: accumulate as DECIMAL(18,6), emit
     ROUND(double, scale)."""
@@ -229,7 +206,7 @@ def q03(spark, sf):
     n = _t(spark, sf, "nation")
     c = _t(spark, sf, "customer")
     o = _t(spark, sf, "orders")
-    li = _t_par(spark, sf, "lineitem", "l_orderkey")
+    li = _t(spark, sf, "lineitem")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)

@@ -57,9 +57,10 @@ import urllib.request
 
 _CHUNK = 64 * 1024
 
-#: the response columns a fetcher returns besides ``url``
-RESPONSE_COLS = ["html", "status", "location", "content_type",
-                 "content_encoding"]
+#: the response columns a fetcher returns besides ``url``, as Spark DDL
+RESPONSE_DDL = ("html binary, status int, location string, "
+                "content_type string, content_encoding string")
+RESPONSE_COLS = [c.split()[0] for c in RESPONSE_DDL.split(",")]
 
 
 def fetch_merge(pdf, fetcher, deadline_s: float | None = None,

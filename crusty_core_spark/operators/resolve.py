@@ -5,7 +5,8 @@ The reference resolves each task's host before fetching
 (main/src/resolver.rs:16-18; trust-dns impl :54-111, static impl :113-119)
 and drops addresses inside 17 reserved IPv4 / 20 IPv6 subnets plus
 user-configured nets (resolver.rs:72-106,147-196; config.rs:249,285-291).
-Resolution fails when every address is filtered out.
+Resolution fails when every address is filtered out. Only the reserved
+IPv4 list is applied here: no configuration carries extra nets.
 
 Spark mapping (SURVEY.md §2.1/§2.2): DNS is a broadcast join against a
 ``hosts(host, addrs)`` dimension table; the blacklist is a vectorized
@@ -39,7 +40,7 @@ RESERVED_V4 = [
 _NETS = [ipaddress.ip_network(n) for n in RESERVED_V4]
 
 
-def ip_blacklisted(addr: str, extra_nets: list | None = None) -> bool:
+def ip_blacklisted(addr: str) -> bool:
     try:
         ip = ipaddress.ip_address(addr)
     except ValueError:
@@ -47,15 +48,11 @@ def ip_blacklisted(addr: str, extra_nets: list | None = None) -> bool:
     for net in _NETS:
         if ip.version == net.version and ip in net:
             return True
-    for net in extra_nets or []:
-        if ip.version == net.version and ip in net:
-            return True
     return False
 
 
-def usable_addrs_udf(extra_cidrs: tuple[str, ...] = ()):
+def usable_addrs_udf():
     """Pandas UDF: array<string> addrs → array<string> of non-blacklisted."""
-    extra = [ipaddress.ip_network(c) for c in extra_cidrs]
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def usable(addrs: pd.Series) -> pd.Series:
@@ -64,7 +61,7 @@ def usable_addrs_udf(extra_cidrs: tuple[str, ...] = ()):
             if lst is None:
                 out.append(None)
                 continue
-            out.append([a for a in lst if not ip_blacklisted(a, extra)])
+            out.append([a for a in lst if not ip_blacklisted(a)])
         return pd.Series(out, dtype=object)
 
     return usable
@@ -78,12 +75,11 @@ def usable_addrs_udf(extra_cidrs: tuple[str, ...] = ()):
 _RESOLVER_CACHE: dict = {}
 
 
-def resolve_failed_flags(hosts, resolver, cache: dict,
-                         nets: list | None = None) -> list[bool]:
+def resolve_failed_flags(hosts, resolver, cache: dict) -> list[bool]:
     """Per-row ``resolve_failed`` through a point ``resolver``: each host
     (lowered, trimmed) not yet in ``cache`` is resolved once and cached as
     has-usable-address. Resolution fails when the resolver raises, returns
-    nothing, or every address is in a reserved or ``nets`` subnet. Both
+    nothing, or every address is in a reserved subnet. Both
     crawl paths fill their resolver cache through here."""
     norm = [str(h or "").strip().lower() for h in hosts]
     for h in set(norm) - cache.keys():
@@ -92,7 +88,7 @@ def resolve_failed_flags(hosts, resolver, cache: dict,
         except Exception:
             addrs = None
         cache[h] = bool(addrs) and any(
-            not ip_blacklisted(a, nets) for a in addrs
+            not ip_blacklisted(a) for a in addrs
         )
     return [not cache[h] for h in norm]
 
@@ -100,7 +96,6 @@ def resolve_failed_flags(hosts, resolver, cache: dict,
 def resolver_stage(
     ready: DataFrame,
     resolver,
-    extra_cidrs: tuple[str, ...] = (),
     host_col: str = "host",
     cache_key: str | None = None,
 ) -> DataFrame:
@@ -119,8 +114,6 @@ def resolver_stage(
     from the pickled resolver bytes; if the resolver doesn't pickle, a fresh
     uuid is used — losing cross-call caching but never sharing stale results
     between two different resolvers in one long-lived worker (ADVICE r3).
-    The blacklist CIDRs are always part of the key: same resolver + a
-    different blacklist must not reuse cached verdicts.
     """
     import hashlib
     import pickle
@@ -128,7 +121,6 @@ def resolver_stage(
 
     from pyspark.sql import types as T2
 
-    extra = tuple(extra_cidrs)
     if cache_key is not None:
         base = str(cache_key)
     else:
@@ -136,7 +128,6 @@ def resolver_stage(
             base = hashlib.md5(pickle.dumps(resolver)).hexdigest()
         except Exception:
             base = uuid.uuid4().hex
-    rkey = (base, extra)
     schema = T2.StructType(
         list(ready.schema.fields)
         + [T2.StructField("resolve_failed", T2.BooleanType())]
@@ -144,11 +135,10 @@ def resolver_stage(
     cols = [f.name for f in schema.fields]
 
     def batches(it):
-        nets = [ipaddress.ip_network(c) for c in extra]
-        cache = _RESOLVER_CACHE.setdefault(rkey, {})
+        cache = _RESOLVER_CACHE.setdefault(base, {})
         for pdf in it:
             pdf["resolve_failed"] = resolve_failed_flags(
-                pdf[host_col], resolver, cache, nets
+                pdf[host_col], resolver, cache
             )
             yield pdf[cols]
 
@@ -158,7 +148,6 @@ def resolver_stage(
 def resolve_ready(
     ready: DataFrame,
     hosts: DataFrame | None,
-    extra_cidrs: tuple[str, ...] = (),
     host_col: str = "host",
     resolver=None,
     resolver_cache_key: str | None = None,
@@ -173,10 +162,10 @@ def resolve_ready(
     task error)."""
     if hosts is None:
         if resolver is not None:
-            return resolver_stage(ready, resolver, extra_cidrs, host_col,
+            return resolver_stage(ready, resolver, host_col,
                                   cache_key=resolver_cache_key)
         return ready.withColumn("resolve_failed", F.lit(False))
-    usable = usable_addrs_udf(extra_cidrs)
+    usable = usable_addrs_udf()
     h = F.broadcast(
         hosts.select(
             F.lower(F.trim(F.col("host"))).alias(host_col),

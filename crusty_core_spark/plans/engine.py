@@ -1193,7 +1193,10 @@ class CrawlEngine:
 
         from pyspark.sql import types as PT
 
-        from crusty_core_spark.operators.fetcher import fetch_merge
+        from crusty_core_spark.operators.fetcher import (
+            RESPONSE_DDL,
+            fetch_merge,
+        )
 
         fetcher = self.fetcher
         # straggler tolerance (CrawlConfig.fetch_deadline_ms): a wall
@@ -1209,10 +1212,7 @@ class CrawlEngine:
             exempt = {
                 r[2] for r in (self.io.state.get("deferred_tasks") or ())
             }
-        page_ddl = (
-            "html binary, status int, location string, "
-            "content_type string, content_encoding string"
-        )
+        page_ddl = RESPONSE_DDL
         if deadline_s is not None:
             page_ddl += ", fetch_deferred boolean"
         out_schema = PT.StructType(

@@ -1,8 +1,10 @@
 """Golden values for the Spark-SQL expression builders (``*_expr``) of
 functions/text.py, dedup_fns.py and vectors.py on the edge inputs the
 DuckDB oracle's fixtures never hold: empty, whitespace-only, single-token
-and repeated-token texts, a zero vector, and column names that need
-quoting.
+and repeated-token texts, a text whose tokens are split by a run of
+spaces and a tab, a zero vector, a vector mixing 1e-7 and 1e7 (whose
+small terms vanish in the double sums but not in a dot product with a
+unit vector), and column names that need quoting.
 
 The expected values are literals, not the DuckDB ``*_sql`` twins: the two
 engines disagree on empty text (DuckDB's ``string_split_regex(trim(''),
@@ -25,6 +27,10 @@ TEXTS = [
     "the cat and the dog",
     "Punct, and. tabs\tok!",
     "der und die das le la",
+    "punct, and. spaces   collapse\tok",
+    "the quick brown fox jumps over the lazy dog",
+    "der und die das der und",
+    "le la et les le",
 ]
 
 
@@ -50,21 +56,30 @@ def test_tokens_expr_twin(spark, docs):
         [], [], ["one"], ["a"] * 5, ["the", "cat", "and", "the", "dog"],
         ["Punct,", "and.", "tabs", "ok!"],
         ["der", "und", "die", "das", "le", "la"],
+        ["punct,", "and.", "spaces", "collapse", "ok"],
+        ["the", "quick", "brown", "fox", "jumps", "over", "the", "lazy",
+         "dog"],
+        ["der", "und", "die", "das", "der", "und"],
+        ["le", "la", "et", "les", "le"],
     ]
-    assert _col(docs, TX.token_count_expr("text")) == [0, 0, 1, 5, 5, 4, 6]
+    assert _col(docs, TX.token_count_expr("text")) == [
+        0, 0, 1, 5, 5, 4, 6, 5, 9, 6, 5,
+    ]
 
 
 def test_quality_feature_exprs(spark, docs):
     assert _col(docs, f"round({TX.avg_word_len_expr('text')}, 6)") == [
-        0.0, 0.0, 3.0, 1.0, 3.0, 4.25, 2.666667,
+        0.0, 0.0, 3.0, 1.0, 3.0, 4.25, 2.666667, 5.2, 3.888889, 3.0, 2.2,
     ]
     assert _col(docs, f"round({TX.punct_ratio_expr('text')}, 6)") == [
-        0.0, 0.0, 0.0, 0.0, 0.0, 0.15, 0.0,
+        0.0, 0.0, 0.0, 0.0, 0.0, 0.15, 0.0, 0.0625, 0.0, 0.0, 0.0,
     ]
     assert _col(docs, TX.fingerprint_expr("text")) == [
         _md5(""), _md5(""), _md5("one"), _md5("aaaaa"),
         _md5("thecatandthedog"), _md5("punctandtabsok"),
-        _md5("derunddiedaslela"),
+        _md5("derunddiedaslela"), _md5("punctandspacescollapseok"),
+        _md5("thequickbrownfoxjumpsoverthelazydog"),
+        _md5("derunddiedasderund"), _md5("lelaetlesle"),
     ]
 
 
@@ -73,14 +88,29 @@ def test_word_shingles_expr_twin(spark, docs, k):
     expected = {
         1: [[], [], ["one"], ["a"], ["the", "cat", "and", "dog"],
             ["Punct,", "and.", "tabs", "ok!"],
-            ["der", "und", "die", "das", "le", "la"]],
+            ["der", "und", "die", "das", "le", "la"],
+            ["punct,", "and.", "spaces", "collapse", "ok"],
+            ["the", "quick", "brown", "fox", "jumps", "over", "lazy", "dog"],
+            ["der", "und", "die", "das"], ["le", "la", "et", "les"]],
         2: [[], [], [], ["a a"], ["the cat", "cat and", "and the", "the dog"],
             ["Punct, and.", "and. tabs", "tabs ok!"],
-            ["der und", "und die", "die das", "das le", "le la"]],
+            ["der und", "und die", "die das", "das le", "le la"],
+            ["punct, and.", "and. spaces", "spaces collapse", "collapse ok"],
+            ["the quick", "quick brown", "brown fox", "fox jumps",
+             "jumps over", "over the", "the lazy", "lazy dog"],
+            ["der und", "und die", "die das", "das der"],
+            ["le la", "la et", "et les", "les le"]],
         3: [[], [], [], ["a a a"], ["the cat and", "cat and the",
                                     "and the dog"],
             ["Punct, and. tabs", "and. tabs ok!"],
-            ["der und die", "und die das", "die das le", "das le la"]],
+            ["der und die", "und die das", "die das le", "das le la"],
+            ["punct, and. spaces", "and. spaces collapse",
+             "spaces collapse ok"],
+            ["the quick brown", "quick brown fox", "brown fox jumps",
+             "fox jumps over", "jumps over the", "over the lazy",
+             "the lazy dog"],
+            ["der und die", "und die das", "die das der", "das der und"],
+            ["le la et", "la et les", "et les le"]],
     }
     assert _col(docs, D.word_shingles_expr("text", k)) == expected[k]
 
@@ -91,7 +121,8 @@ def test_token_md5s_and_simhash_expr_twins(spark, docs):
     assert _col(h, D.simhash16_from_hashes_expr("_h")) == [
         "0000000000000000", "0000000000000000", "1101010110011101",
         "0110001110101011", "1110010011110011", "0101000101000111",
-        "0100000100100001",
+        "0100000100100001", "0001110101101011", "0110011111110011",
+        "0110000100100000", "1101001010011001",
     ]
 
 
@@ -120,10 +151,10 @@ def test_lang_score_expr_twin(spark, docs):
     """Non-overlapping marker hits by the replace trick: ' a a a a a '
     holds three ' a ', not five."""
     expected = {
-        "de": [0, 0, 0, 0, 0, 0, 4],
-        "en": [0, 0, 0, 3, 3, 0, 0],
-        "es": [0, 0, 0, 0, 0, 0, 0],
-        "fr": [0, 0, 0, 0, 0, 0, 2],
+        "de": [0, 0, 0, 0, 0, 0, 4, 0, 0, 6, 0],
+        "en": [0, 0, 0, 3, 3, 0, 0, 0, 2, 0, 0],
+        "es": [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0],
+        "fr": [0, 0, 0, 0, 0, 0, 2, 0, 0, 0, 5],
     }
     for lang, want in expected.items():
         assert _col(docs, TX.lang_score_expr("text", lang)) == want, lang
@@ -139,7 +170,9 @@ def test_lang_id_from_scores_expr_twin(spark, docs):
     pred = TX.lang_id_from_scores_expr(
         {lang: f"score {lang}" for lang in langs}
     )
-    assert _col(scored, pred) == ["und", "und", "und", "en", "en", "und", "de"]
+    assert _col(scored, pred) == [
+        "und", "und", "und", "en", "en", "und", "de", "und", "en", "de", "fr",
+    ]
 
 
 def test_builders_quote_column_names(spark):
@@ -163,6 +196,7 @@ VECS = [
     [1.0, 0.0, 0.0, 0.0],
     [0.0, 0.0, 0.0, 0.0],
     [-1.5, 2.25, -3.125, 0.0625],
+    [1e-7, 1e7, -1e-7, -1e7],
 ]
 
 
@@ -176,18 +210,20 @@ def vecs(spark):
 
 def test_vector_norm_dot_expr_twins(spark, vecs):
     """float elements widen to double before the multiply: 0.1f etc. carry
-    their float error into the double sums."""
+    their float error into the double sums; the 1e-7 terms vanish against
+    1e14 in the left-to-right fold."""
     assert _col(vecs, V._norm_expr("embedding"), "vec_id") == [
-        0.5477225697477194, 1.0, 0.0, 4.13304140434136,
+        0.5477225697477194, 1.0, 0.0, 4.13304140434136, 14142135.62373095,
     ]
     assert _col(vecs, V._dot_expr("embedding", "embedding"), "vec_id") == [
-        0.30000001341104526, 1.0, 0.0, 17.08203125,
+        0.30000001341104526, 1.0, 0.0, 17.08203125, 200000000000000.0,
     ]
 
 
 def test_cos_hoisted_expr_twin(spark, vecs):
     """The hoisted-norm cosine equals cosine_expr rounded to 6; a zero
-    vector raises ANSI DIVIDE_BY_ZERO in both."""
+    vector raises ANSI DIVIDE_BY_ZERO in both. Unrounded, [1, 0, 0, 0]
+    against the 1e-7/1e7 vector keeps the float error of 1e-7f."""
     nz = vecs.where("vec_id != 2")
     two = nz.withColumnRenamed("embedding", "a").crossJoin(
         nz.selectExpr("vec_id AS vid2", "embedding AS b")
@@ -198,9 +234,16 @@ def test_cos_hoisted_expr_twin(spark, vecs):
                  f"{V._cos_hoisted_expr('a', 'b', '_na', '_nb')} AS c")
     plain = two.selectExpr("vec_id", "vid2",
                            f"round({V.cosine_expr('a', 'b')}, 6) AS c")
-    expected = [(0, 1, 0.182574), (0, 3, -0.270568), (1, 3, -0.362929)]
+    expected = [(0, 1, 0.182574), (0, 3, -0.270568), (0, 4, -0.258199),
+                (1, 3, -0.362929), (1, 4, 0.0), (3, 4, 0.374251)]
     assert sorted(map(tuple, hoisted.collect())) == expected
     assert sorted(map(tuple, plain.collect())) == expected
+    raw = two.selectExpr("vec_id", "vid2", f"{V.cosine_expr('a', 'b')} AS c")
+    assert sorted(map(tuple, raw.collect())) == [
+        (0, 1, 0.1825741844747717), (0, 3, -0.27056755861245657),
+        (0, 4, -0.2581988878234321), (1, 3, -0.3629288587393282),
+        (1, 4, 7.071067894498663e-15), (3, 4, 0.37425129160836007),
+    ]
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
         vecs.selectExpr(
             f"{V.cosine_expr('embedding', 'embedding')} AS c"
